@@ -45,7 +45,7 @@ def scan_partitions(df: DataFrame) -> int:
     how many byte ranges were planned), so the file count bounds their
     real parallelism. Non-file-backed frames report "already parallel"
     so the gate no-ops (createDataFrame input is parallelized by
-    Spark). The RDD conversion is plan-time metadata only.
+    Spark). No Spark job runs (see ``_planned_partitions``).
     """
     par = df.sparkSession.sparkContext.defaultParallelism
     try:
@@ -57,7 +57,7 @@ def scan_partitions(df: DataFrame) -> int:
     if all(f.rstrip("/").lower().endswith(_ROW_GROUP_SUFFIXES) for f in files):
         return len(files)
     try:
-        planned = df.rdd.getNumPartitions()
+        planned = _planned_partitions(df, len(files))
     except Exception:  # noqa: BLE001
         return par
     # extension-less data files (external/lake layouts) may still be a
@@ -69,6 +69,28 @@ def scan_partitions(df: DataFrame) -> int:
     if all(f.rstrip("/").lower().endswith(_TEXT_SUFFIXES) for f in files):
         return planned
     return min(len(files), planned)
+
+
+def _planned_partitions(df: DataFrame, n_files: int) -> int:
+    """Planned partition count of ``df``, read without starting a job.
+
+    ``df.rdd`` is plan-time metadata only while the plan is not
+    adaptive: once it holds an exchange, adaptive query execution runs
+    the upstream stages to settle the final plan (a whole text-read
+    stage per call). An adaptive plan is read from its prepared initial
+    plan instead. Only an explicit ``repartition(n)`` (round-robin,
+    which AQE never coalesces) states its final width there; any other
+    exchange (an aggregate's, a join's, ``repartition(col)``) may still
+    be coalesced at run time, so it reports the file count, the same
+    bound as extension-less files: the gate errs toward fanning out.
+    """
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() != "AdaptiveSparkPlan":
+        return df.rdd.getNumPartitions()
+    part = plan.initialPlan().outputPartitioning()
+    if part.getClass().getSimpleName() == "RoundRobinPartitioning":
+        return part.numPartitions()
+    return n_files
 
 
 def persist_tracked(df: DataFrame) -> DataFrame:

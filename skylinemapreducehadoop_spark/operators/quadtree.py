@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from skylinemapreducehadoop_spark.operators._kernel import skyline_mask
+from skylinemapreducehadoop_spark.operators._kernel import dominance_matrix, skyline_mask
 
 # Tree nodes are plain picklable values for broadcast:
 #   internal -> {"mid": [float], "ch": {int: node}}
@@ -426,9 +426,7 @@ def quadtree_skyline(
             tbl = pa.Table.from_batches([batch])
             vals = _signed_matrix(tbl, dim_signs)
             if len(fpts):
-                le = (fpts[None, :, :] <= vals[:, None, :]).all(axis=2)
-                lt = (fpts[None, :, :] < vals[:, None, :]).any(axis=2)
-                alive = ~(le & lt).any(axis=1)
+                alive = ~dominance_matrix(fpts, vals).any(axis=1)
                 tbl, vals = tbl.filter(pa.array(alive)), vals[alive]
             if tbl.num_rows == 0:
                 continue
@@ -437,9 +435,7 @@ def quadtree_skyline(
             # replicate p to cell c2 iff isNeeded(cell(p), c2) and
             # p dominates VPn(c2)
             src = np.array([cidx[c] for c in tbl.column("__cell").to_pylist()])
-            dom_le = (vals[:, None, :] <= vpns[None, :, :]).all(axis=2)
-            dom_lt = (vals[:, None, :] < vpns[None, :, :]).any(axis=2)
-            targets = dom_le & dom_lt & needm[src]
+            targets = dominance_matrix(vals, vpns).T & needm[src]
             pi, ci = np.nonzero(targets)
             if len(pi):
                 star = tbl.take(pa.array(pi))
@@ -462,9 +458,7 @@ def quadtree_skyline(
             return plus
         pv = _signed_matrix(plus, dim_signs)
         sv = _signed_matrix(star, dim_signs)
-        le = (sv[None, :, :] <= pv[:, None, :]).all(axis=2)
-        lt = (sv[None, :, :] < pv[:, None, :]).any(axis=2)
-        return plus.filter(pa.array(~(le & lt).any(axis=1)))
+        return plus.filter(pa.array(~dominance_matrix(sv, pv).any(axis=1)))
 
     result = merged.groupBy("__cell").applyInArrow(final_check, merge_schema)
     return result.drop("__cell", "__tag")

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from skylinemapreducehadoop_spark.operators._kernel import skyline_mask
+from skylinemapreducehadoop_spark.operators._kernel import dominance_matrix, skyline_mask
 
 DimSpec = Sequence[tuple[str, str]]
 
@@ -175,7 +175,6 @@ def skyline(
     dims: DimSpec,
     *,
     strategy: str = "twophase",
-    reduce_levels: int | None = None,
     merge_batch_rows: int = _MERGE_BATCH_ROWS,
     merge: str = "tree",
     blocked_rows: int = 65_536,
@@ -208,14 +207,12 @@ def skyline(
         survives iff no block dominates it. Costs a B-way replication
         shuffle — opt in for anti-correlated data at extreme scale.
 
-    NOTE (declarative-API caveat): with the default
-    ``reduce_levels=None``, CALLING this function runs one Spark job
-    eagerly for BOTH merge modes — the local pass is persisted and
+    NOTE (declarative-API caveat): CALLING this function runs one Spark
+    job eagerly for BOTH merge modes — the local pass is persisted and
     counted so the auto guard can size its merge levels (tree) or its
     block count (blocked) from the measured candidate count; the count
     job fills the cache the merge plan then reuses, so the kernel runs
-    once. Pass ``reduce_levels`` explicitly with ``merge="tree"`` for
-    fully lazy plan construction.
+    once.
     """
     dim_signs = normalize_dims(dims)
     dim_cols = [c for c, _ in dim_signs]
@@ -260,27 +257,16 @@ def skyline(
     # reducer, /root/reference/Skyline.java:414), but on anti-correlated
     # data the union of local skylines can be huge, so intermediate
     # levels bound each merge task's fan-in.
-    if reduce_levels is None:
-        # auto guard: materialize the (small) local skyline once and
-        # measure it; widths then cap rows-per-merge-task. The persist
-        # means the local pass is not recomputed by the merge.
-        local = _persist_tracked(local)
-        n_local = local.count()
-        widths: list[int] = []
-        w = -(-n_local // merge_batch_rows)  # ceil
-        while w > 1:
-            widths.append(int(w))
-            w = -(-w // _MERGE_FAN_IN)
-    else:
-        # explicit override: reduce_levels-1 intermediate levels with
-        # sqrt-decaying widths (legacy behavior)
-        widths = []
-        n_parts = max(sc.defaultParallelism if reduce_levels > 1 else 1, 1)
-        for _ in range(max(reduce_levels - 1, 0)):
-            n_parts = max(int(np.sqrt(n_parts)), 1)
-            if n_parts <= 1:
-                break
-            widths.append(n_parts)
+    # auto guard: materialize the (small) local skyline once and
+    # measure it; widths then cap rows-per-merge-task. The persist
+    # means the local pass is not recomputed by the merge.
+    local = _persist_tracked(local)
+    n_local = local.count()
+    widths: list[int] = []
+    w = -(-n_local // merge_batch_rows)  # ceil
+    while w > 1:
+        widths.append(int(w))
+        w = -(-w // _MERGE_FAN_IN)
 
     current = local
     for w in widths:
@@ -319,8 +305,6 @@ def _blocked_merge(local: DataFrame, dim_signs: list[tuple[str, float]], blocked
     at sf0.1; see PLANS.md §15); correctness no longer leans on it.
     """
     d = len(dim_signs)
-    spark = local.sparkSession
-
     local = _persist_tracked(local)
     n_cand = local.count()
     if n_cand == 0:
@@ -351,33 +335,29 @@ def _blocked_merge(local: DataFrame, dim_signs: list[tuple[str, float]], blocked
         lv = left[scols].to_numpy(dtype=np.float64)
         rv = right[scols].to_numpy(dtype=np.float64)
         out = np.zeros(len(lv), dtype=bool)
-        # chunk candidates so the pairwise bool block stays ~64 MB
-        step = max(1, (1 << 26) // max(len(rv), 1))
+        # chunk candidates so each pairwise bool matrix stays ~16 MB
+        step = max(1, (1 << 24) // max(len(rv), 1))
         for s0 in range(0, len(lv), step):
-            lc = lv[s0 : s0 + step]
-            le = (rv[None, :, :] <= lc[:, None, :]).all(axis=2)
-            lt = (rv[None, :, :] < lc[:, None, :]).any(axis=2)
-            out[s0 : s0 + step] = (le & lt).any(axis=1)
+            out[s0 : s0 + step] = dominance_matrix(rv, lv[s0 : s0 + step]).any(axis=1)
         return pd.DataFrame({"__rid": left["__rid"].to_numpy()[out]})
 
     dominated = (
         cand_side.groupBy("__blk", "__opp")
         .cogroup(opp_side.groupBy("__cand_blk", "__blk"))
-        .applyInPandas(lambda l, r: dominated_ids(l, r), "__rid string")
+        .applyInPandas(dominated_ids, "__rid string")
         .distinct()
     )
     return tagged.join(dominated, "__rid", "left_anti").drop("__rid")
 
 
-def _dominator_counts(cand: np.ndarray, rows: np.ndarray, chunk: int = 4096) -> np.ndarray:
+def _dominator_counts(cand: np.ndarray, rows: np.ndarray) -> np.ndarray:
     """For each candidate vector, how many of ``rows`` strictly dominate
     it (min-normalized values; duplicates count, ties don't dominate)."""
     counts = np.zeros(len(cand), dtype=np.int64)
-    for s0 in range(0, len(rows), chunk):
-        x = rows[s0 : s0 + chunk]
-        le = (x[:, None, :] <= cand[None, :, :]).all(axis=2)
-        lt = (x[:, None, :] < cand[None, :, :]).any(axis=2)
-        counts += (le & lt).sum(axis=0)
+    # chunk rows so each pairwise bool matrix stays ~16 MB
+    step = max(1, (1 << 24) // max(len(cand), 1))
+    for s0 in range(0, len(rows), step):
+        counts += dominance_matrix(rows[s0 : s0 + step], cand).sum(axis=1)
     return counts
 
 
@@ -420,7 +400,6 @@ def skyline_kband(
     dim_signs = normalize_dims(dims)
     dim_cols = [c for c, _ in dim_signs]
     clean = _drop_null_dims(df, dim_cols)
-    spark = df.sparkSession
 
     def local_kband(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # k-band needs within-partition dominator counts, so the

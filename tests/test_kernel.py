@@ -4,10 +4,20 @@ SURVEY.md §5.3 (no Spark needed — pure numpy)."""
 
 from __future__ import annotations
 
+from unittest import mock
+
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from hypothesis.extra import numpy as hnp
 
-from skylinemapreducehadoop_spark.operators._kernel import dominates, skyline_mask
+from skylinemapreducehadoop_spark.operators import _kernel
+from skylinemapreducehadoop_spark.operators._kernel import (
+    dominance_matrix,
+    dominates,
+    skyline_mask,
+)
 
 
 def brute_force_mask(values: np.ndarray) -> np.ndarray:
@@ -124,3 +134,48 @@ def test_monotone_transform_invariance():
     ref = skyline_mask(pts)
     transformed = np.column_stack([np.exp(pts[:, 0]), pts[:, 1] ** 3])
     assert (skyline_mask(transformed) == ref).all()
+
+
+# --- properties against the scalar definition -------------------------------
+
+_BIG = np.finfo(np.float64).max
+#: a small value pool makes ties and duplicates common; it holds both
+#: zeros, both infinities, the finite extremes (whose sums overflow) and NaN
+_POOL = [-np.inf, -_BIG, -1.0, -0.0, 0.0, 0.5, 1.0, 3.0, _BIG, np.inf, np.nan]
+_ELEMENTS = st.sampled_from(_POOL) | st.floats(-4, 4, width=16)
+
+
+def _matrix(d: int, max_rows: int = 40):
+    return hnp.arrays(np.float64, st.tuples(st.integers(0, max_rows), st.just(d)), elements=_ELEMENTS)
+
+
+@settings(max_examples=300, deadline=None)
+@given(data=st.data(), d=st.integers(1, 9))
+def test_dominance_matrix_matches_scalar(data, d):
+    p = data.draw(_matrix(d), label="p")
+    q = data.draw(_matrix(d), label="q")
+    got = dominance_matrix(p, q)
+    assert got.shape == (len(q), len(p))
+    want = [[dominates(pj, qi) for pj in p] for qi in q]
+    assert got.tolist() == want
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    data=st.data(),
+    d=st.integers(1, 9),
+    chunk=st.sampled_from([1, 7, 512, None]),
+    window_chunk=st.sampled_from([3, _kernel._WINDOW_CHUNK]),
+)
+def test_skyline_mask_matches_brute_force_property(data, d, chunk, window_chunk):
+    """Any chunking (None: one chunk of all n rows), any window block,
+    ties, duplicates, ±0, ±inf and NaN: a row holding NaN is never
+    dominated and never dominates."""
+    values = data.draw(_matrix(d), label="values")
+    with mock.patch.object(_kernel, "_WINDOW_CHUNK", window_chunk):
+        got = skyline_mask(values, chunk=chunk or max(len(values), 1))
+    assert got.tolist() == brute_force_mask(values).tolist()
+
+
+def test_all_identical_large():
+    assert skyline_mask(np.ones((5000, 9))).all()

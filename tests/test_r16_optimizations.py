@@ -59,6 +59,36 @@ def test_scan_partitions_text_vs_parquet(spark, tmp_path):
     assert scan_partitions(mem) == par
 
 
+def test_scan_partitions_starts_no_job(spark, tmp_path):
+    """Over a plan holding an exchange, ``df.rdd`` makes adaptive
+    execution run the upstream stage; scan_partitions must read the
+    planned width instead, so no job runs across the call."""
+    from skylinemapreducehadoop_spark.operators._cache import scan_partitions
+
+    txt = tmp_path / "lines.txt"
+    txt.write_text("a\nb\nc\n" * 100)
+    text = spark.read.text(str(txt))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    cases = [
+        (text, 1),  # no exchange: the planned scan split count
+        (text.repartition(3), 3),  # explicit width, never coalesced
+        # an exchange AQE may coalesce, even above an explicit one: the file count
+        (text.groupBy("value").count(), 1),
+        (text.repartition(3).groupBy("value").count(), 1),
+    ]
+    for k, (df, want) in enumerate(cases):
+        group = f"scan-partitions-probe-{k}"
+        sc.setJobGroup(group, group)
+        try:
+            got = scan_partitions(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert tracker.getJobIdsForGroup(group) == [], k
+        assert got == want, (k, got)
+
+
 def test_hist_merge_null_and_all_zero_sketches(spark):
     from skylinemapreducehadoop_spark.operators.sketches import hist_merge
 
