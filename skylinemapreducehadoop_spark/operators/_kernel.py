@@ -29,6 +29,8 @@ import numpy as np
 # 2048 up to 2.8x, as a wider chunk compares more rows pairwise.
 _CHUNK = 512
 _WINDOW_CHUNK = 4096
+#: cells of one ``dominator_counts`` matrix: 16 MB of bools
+_COUNT_CELLS = 1 << 24
 
 
 def dominance_matrix(p: np.ndarray, q: np.ndarray) -> np.ndarray:
@@ -46,6 +48,27 @@ def dominance_matrix(p: np.ndarray, q: np.ndarray) -> np.ndarray:
         le &= np.less_equal(pk, qk, out=tmp)
         lt |= np.less(pk, qk, out=tmp)
     return np.logical_and(le, lt, out=le)
+
+
+def dominator_counts(cand: np.ndarray, rows: np.ndarray, cap: int | None = None) -> np.ndarray:
+    """For each row of ``cand``, ``min(true count, cap)`` of the ``rows``
+    that strictly dominate it (duplicates count, ties don't dominate).
+
+    Rows are chunked so one matrix stays within 16 MB, and a candidate
+    that reaches ``cap`` drops out of later chunks. Capped partial counts
+    stay exact for a ``< cap`` filter: sum(min(c_i, cap)) < cap holds
+    exactly when sum(c_i) < cap.
+    """
+    counts = np.zeros(len(cand), dtype=np.int64)
+    live = np.arange(len(cand))
+    s0 = 0
+    while s0 < len(rows) and len(live):
+        step = max(1, _COUNT_CELLS // len(live))
+        counts[live] += dominance_matrix(rows[s0 : s0 + step], cand[live]).sum(axis=1)
+        s0 += step
+        if cap is not None:
+            live = live[counts[live] < cap]
+    return counts if cap is None else np.minimum(counts, cap)
 
 
 def _sfs_order(values: np.ndarray) -> np.ndarray:

@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from skylinemapreducehadoop_spark.operators._kernel import dominance_matrix, skyline_mask
+from skylinemapreducehadoop_spark.operators._kernel import dominance_matrix, dominator_counts, skyline_mask
 
 # Tree nodes are plain picklable values for broadcast:
 #   internal -> {"mid": [float], "ch": {int: node}}
@@ -426,7 +426,7 @@ def quadtree_skyline(
             tbl = pa.Table.from_batches([batch])
             vals = _signed_matrix(tbl, dim_signs)
             if len(fpts):
-                alive = ~dominance_matrix(fpts, vals).any(axis=1)
+                alive = dominator_counts(vals, fpts, cap=1) == 0
                 tbl, vals = tbl.filter(pa.array(alive)), vals[alive]
             if tbl.num_rows == 0:
                 continue
@@ -458,7 +458,7 @@ def quadtree_skyline(
             return plus
         pv = _signed_matrix(plus, dim_signs)
         sv = _signed_matrix(star, dim_signs)
-        return plus.filter(pa.array(~dominance_matrix(sv, pv).any(axis=1)))
+        return plus.filter(pa.array(dominator_counts(pv, sv, cap=1) == 0))
 
     result = merged.groupBy("__cell").applyInArrow(final_check, merge_schema)
     return result.drop("__cell", "__tag")

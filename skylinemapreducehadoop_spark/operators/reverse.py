@@ -25,7 +25,7 @@ Physical plan (the forward two-phase pattern transplanted):
    violator of p in p's own partition is a violator globally, so the
    union of per-partition survivors contains the answer — under ANY
    partitioning. The input is therefore repartitioned into blocks of
-   ``local_block_rows`` first: the pairwise check is O(m² d) per
+   ``_LOCAL_BLOCK_ROWS`` first: the pairwise check is O(m² d) per
    partition, so splitting one m-row partition into k blocks cuts the
    work by k× AND runs it on k cores (a single-file local scan would
    otherwise serialize a quadratic pass through one task). Survivors
@@ -33,51 +33,56 @@ Physical plan (the forward two-phase pattern transplanted):
    that removes most of the extra candidates the finer split let
    through — both passes keep the superset property because a true
    reverse-skyline point has no violators anywhere.
-2. **Verify pass** — survivors are counted against the FULL data:
-   broadcast-and-count when the survivor set is driver-small (one
-   distributed pass; counts, not rows, cross the wire), else a
-   two-sided blocked cogroup with bounded per-task memory and no
-   driver materialization (the ``skyline_kband`` phase-2 shape).
+2. **Verify pass** — survivors are counted against the FULL data by
+   ``skyline._verify_candidates``, the same check ``skyline_kband``
+   and the blocked skyline merge run, with the box-violation count and
+   k = 1: broadcast-and-count when the survivor set is driver-small,
+   else a blocked cogroup with bounded per-task memory and no driver
+   materialization.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 import numpy as np
-import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from skylinemapreducehadoop_spark.operators.skyline import (
-    _arrow_matrix,
     _drop_null_dims,
+    _local_filter_fn,
     _persist_tracked,
-    _values_matrix,
+    _verify_candidates,
 )
 
+#: rows per block of the fine first local pass
+_LOCAL_BLOCK_ROWS = 4_096
 
-def _box_violation_counts(
-    cand: np.ndarray, radii: np.ndarray, rows: np.ndarray
-) -> np.ndarray:
-    """For each candidate p (with box radius |q - p| precomputed in
-    ``radii``), count rows t that dominate q w.r.t. p: |t - p| <= r
-    componentwise, strict somewhere, and t != p in some dimension."""
-    counts = np.zeros(len(cand), dtype=np.int64)
-    if len(cand) == 0 or len(rows) == 0:
-        return counts
-    # chunk the (candidates x rows x dims) block to ~64 MB
-    step = max(1, (1 << 26) // max(len(rows) * cand.shape[1], 1))
-    for s0 in range(0, len(cand), step):
-        p = cand[s0 : s0 + step]  # (s, d)
-        r = radii[s0 : s0 + step]
-        diff = np.abs(rows[None, :, :] - p[:, None, :])  # (s, m, d)
-        le = (diff <= r[:, None, :]).all(axis=2)
-        lt = (diff < r[:, None, :]).any(axis=2)
-        neq = (rows[None, :, :] != p[:, None, :]).any(axis=2)
-        counts[s0 : s0 + step] = (le & lt & neq).sum(axis=1)
+
+def _box_violations(q: np.ndarray):
+    """``count_fn`` for the reverse skyline: for each candidate p, the
+    rows t that dominate q w.r.t. p — |t - p| <= |q - p| componentwise,
+    strict somewhere, and t != p in some dimension. Counts are exact,
+    so ``cap`` is not needed."""
+
+    def counts(cand: np.ndarray, rows: np.ndarray, cap: int | None = None) -> np.ndarray:
+        out = np.zeros(len(cand), dtype=np.int64)
+        if len(cand) == 0 or len(rows) == 0:
+            return out
+        radii = np.abs(q[None, :] - cand)
+        # chunk the (candidates x rows x dims) block to ~64 MB
+        step = max(1, (1 << 26) // max(len(rows) * cand.shape[1], 1))
+        for s0 in range(0, len(cand), step):
+            p = cand[s0 : s0 + step]  # (s, d)
+            r = radii[s0 : s0 + step]
+            diff = np.abs(rows[None, :, :] - p[:, None, :])  # (s, m, d)
+            le = (diff <= r[:, None, :]).all(axis=2)
+            lt = (diff < r[:, None, :]).any(axis=2)
+            neq = (rows[None, :, :] != p[:, None, :]).any(axis=2)
+            out[s0 : s0 + step] = (le & lt & neq).sum(axis=1)
+        return out
+
     return counts
 
 
@@ -85,11 +90,6 @@ def reverse_skyline(
     df: DataFrame,
     dims: Sequence[str],
     query_point: Sequence[float],
-    *,
-    broadcast_rows: int = 1_000_000,
-    cand_block_rows: int = 65_536,
-    data_block_rows: int = 1 << 20,
-    local_block_rows: int = 4_096,
 ) -> DataFrame:
     """Rows of ``df`` in the reverse skyline of ``query_point`` over
     ``dims`` (all numeric/temporal; NULL-dim rows are excluded, like the
@@ -106,20 +106,8 @@ def reverse_skyline(
     # unsigned dims: the distance transform has no min/max direction
     dim_signs = [(c, 1.0) for c in dim_cols]
     clean = _drop_null_dims(df, dim_cols)
-    spark = df.sparkSession
-
-    def local_pass(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # the violation check needs within-partition pairs, so the
-        # partition is buffered (a Spark partition is sized to memory)
-        parts = [pa.Table.from_batches([b]) for b in batches if b.num_rows]
-        if not parts:
-            return
-        tbl = pa.concat_tables(parts).combine_chunks()
-        vals = _arrow_matrix(tbl, dim_signs)
-        keep = _box_violation_counts(vals, np.abs(q[None, :] - vals), vals) == 0
-        out = tbl.filter(pa.array(keep))
-        if out.num_rows:
-            yield from out.to_batches()
+    violations = _box_violations(q)
+    local_pass = _local_filter_fn(dim_signs, violations, 1)
 
     # bound the quadratic local pass: O(m²) per partition means one
     # fat partition (a single-file scan) serializes the whole pass —
@@ -131,8 +119,8 @@ def reverse_skyline(
     n_rows = clean.count()
     if n_rows == 0:
         return clean.limit(0)
-    n_blocks = max(1, -(-n_rows // local_block_rows))
-    local_src = clean.repartition(n_blocks) if n_rows > local_block_rows else clean
+    n_blocks = max(1, -(-n_rows // _LOCAL_BLOCK_ROWS))
+    local_src = clean.repartition(n_blocks) if n_rows > _LOCAL_BLOCK_ROWS else clean
     surv1 = local_src.mapInArrow(local_pass, df.schema).select(*dim_cols).distinct()
 
     # second, coarser local pass over the (small) survivor set: the
@@ -149,100 +137,8 @@ def reverse_skyline(
     n_surv = surv.count()
     if n_surv == 0:
         return clean.limit(0)
-
-    if n_surv <= broadcast_rows:
-        qdf = _verify_broadcast(clean, surv, dim_signs, q)
-        return clean.join(F.broadcast(qdf), on=dim_cols, how="left_semi")
-    qdf = _verify_blocked(
-        clean, surv, dim_signs, q, n_surv, cand_block_rows, data_block_rows
-    )
-    return clean.join(qdf, on=dim_cols, how="left_semi")
-
-
-def _verify_broadcast(clean, surv, dim_signs, q):
-    """Full-data verification for a driver-small survivor set."""
-    spark = clean.sparkSession
-    dim_cols = [c for c, _ in dim_signs]
-    surv_tbl = surv.toArrow()
-    cand = _arrow_matrix(surv_tbl, dim_signs)
-    radii = np.abs(q[None, :] - cand)
-    b_ctx = spark.sparkContext.broadcast((cand, radii))
-
-    count_schema = T.StructType(
-        [T.StructField("__idx", T.LongType()), T.StructField("__cnt", T.LongType())]
-    )
-
-    def partial_counts(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        c, r = b_ctx.value
-        total = np.zeros(len(c), dtype=np.int64)
-        seen = False
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            seen = True
-            tbl = pa.Table.from_batches([batch])
-            total += _box_violation_counts(c, r, _arrow_matrix(tbl, dim_signs))
-        if seen:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.arange(len(c))), pa.array(total)],
-                schema=pa.schema([("__idx", pa.int64()), ("__cnt", pa.int64())]),
-            )
-
-    totals = (
-        clean.select(*dim_cols)
-        .mapInArrow(partial_counts, count_schema)
-        .groupBy("__idx")
-        .agg(F.sum("__cnt").alias("n_viol"))
-        .collect()
-    )
-    n_viol = np.zeros(len(cand), dtype=np.int64)
-    for r0 in totals:
-        n_viol[r0["__idx"]] = r0["n_viol"]
-    return spark.createDataFrame(surv_tbl.to_pandas().loc[n_viol == 0, dim_cols])
-
-
-def _verify_blocked(clean, surv, dim_signs, q, n_surv, cand_block_rows, data_block_rows):
-    """Fully distributed verification (no driver materialization):
-    every (survivor-block, data-block) pair runs in its own cogroup
-    task; per-pair partial violation counts are summed per vector."""
-    dim_cols = [c for c, _ in dim_signs]
-    n_data = clean.count()
-    B = max(1, -(-n_surv // cand_block_rows))
-    D = max(1, -(-n_data // data_block_rows))
-
-    cand_side = (
-        surv.withColumn("__cblk", F.pmod(F.hash(*dim_cols), F.lit(B)).cast("int"))
-        .select("*", F.explode(F.sequence(F.lit(0), F.lit(D - 1))).alias("__dblk"))
-    )
-    data_side = (
-        clean.select(*dim_cols)
-        .withColumn("__dblk", F.pmod(F.hash(*dim_cols), F.lit(D)).cast("int"))
-        .select("*", F.explode(F.sequence(F.lit(0), F.lit(B - 1))).alias("__cblk"))
-    )
-
-    out_schema = T.StructType(
-        [clean.schema[c] for c in dim_cols] + [T.StructField("__cnt", T.LongType(), False)]
-    )
-
-    def pair_counts(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        cand_pdf = left.drop(columns=["__cblk", "__dblk"])
-        cmat = _values_matrix(cand_pdf, dim_signs)
-        dmat = _values_matrix(right, dim_signs)
-        out = cand_pdf.copy()
-        out["__cnt"] = _box_violation_counts(cmat, np.abs(q[None, :] - cmat), dmat)
-        return out
-
-    partial = (
-        cand_side.groupBy("__cblk", "__dblk")
-        .cogroup(data_side.groupBy("__cblk", "__dblk"))
-        .applyInPandas(pair_counts, out_schema)
-    )
-    return (
-        partial.groupBy(*dim_cols)
-        .agg(F.sum("__cnt").alias("__n_viol"))
-        .where(F.col("__n_viol") == 0)
-        .select(*dim_cols)
-    )
+    keep = _verify_candidates(clean, surv, n_surv, dim_signs, violations, 1)
+    return clean.join(keep, on=dim_cols, how="left_semi")
 
 
 def dynamic_skyline(

@@ -20,6 +20,13 @@ Physical plan (strategy="twophase", the default):
    (``/root/reference/Skyline.java:414``) but only ever sees
    already-reduced data.
 
+Candidate verification — the paper's global check of local-skyline
+candidates against the other rows (the reference's ``GSkyReducer.java:20-32``)
+— is one helper, ``_verify_candidates``: it keeps the candidate vectors
+that fewer than k rows match under a count function, by broadcast-and-
+count or by a block-pair cogroup. ``skyline(merge="blocked")``,
+``skyline_kband`` and ``reverse.reverse_skyline`` all run it.
+
 strategy="quadtree" routes to the dominance-aware quadtree partitioner
 (see ``operators/quadtree.py``), the reference's actual contribution:
 data-space cells prune provably-dominated regions *before* the local
@@ -42,7 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from skylinemapreducehadoop_spark.operators._kernel import dominance_matrix, skyline_mask
+from skylinemapreducehadoop_spark.operators._kernel import dominator_counts, skyline_mask
 
 DimSpec = Sequence[tuple[str, str]]
 
@@ -177,7 +184,6 @@ def skyline(
     strategy: str = "twophase",
     merge_batch_rows: int = _MERGE_BATCH_ROWS,
     merge: str = "tree",
-    blocked_rows: int = 65_536,
     quadtree_opts: dict | None = None,
 ) -> DataFrame:
     """Pareto-optimal rows of ``df`` under per-dimension min/max directions.
@@ -199,13 +205,13 @@ def skyline(
       - ``"tree"`` (default): tree-reduce to ONE final partition. Right
         whenever the global Pareto set fits one task (the overwhelmingly
         common case — the tree guard bounds fan-in automatically).
-      - ``"blocked"``: fully distributed block-nested verification — NO
+      - ``"blocked"``: fully distributed verification — NO
         single-partition stage anywhere, so even a Pareto set far larger
-        than one task's memory works. Candidates are hashed into B
-        blocks (B = ceil(|candidates| / blocked_rows)); every (i, j)
-        block pair is checked in its own task via cogroup, and a row
-        survives iff no block dominates it. Costs a B-way replication
-        shuffle — opt in for anti-correlated data at extreme scale.
+        than one task's memory works. The candidate vectors are
+        checked against each other in block pairs (``_verify_candidates``
+        on its blocked path) and the local skyline is semi-joined on the
+        survivors. Costs a block-replication shuffle — opt in for
+        anti-correlated data at extreme scale.
 
     NOTE (declarative-API caveat): CALLING this function runs one Spark
     job eagerly for BOTH merge modes — the local pass is persisted and
@@ -233,6 +239,8 @@ def skyline(
 
     if strategy != "twophase":
         raise ValueError(f"unknown strategy {strategy!r}")
+    if merge not in ("tree", "blocked"):
+        raise ValueError(f"unknown merge {merge!r}")
 
     # The local pass is CPU-bound kernel work: if the PLANNED scan has
     # fewer partitions than cores (small files / single unsplittable
@@ -244,24 +252,29 @@ def skyline(
     sc = df.sparkSession.sparkContext
     if 0 < scan_partitions(clean) < sc.defaultParallelism:
         clean = clean.repartition(sc.defaultParallelism)
-    local = clean.mapInArrow(fn, df.schema)
+    # Both merges size themselves from the local skyline: materialize it
+    # once and measure it. The persist means the local pass is not
+    # recomputed by the merge.
+    local = _persist_tracked(clean.mapInArrow(fn, df.schema))
+    n_local = local.count()
 
     if merge == "blocked":
-        return _blocked_merge(local, dim_signs, blocked_rows)
-    if merge != "tree":
-        raise ValueError(f"unknown merge {merge!r}")
+        # a vector's dominated fate depends only on its values, so the
+        # vectors are verified and every copy semi-joins back (Spark's
+        # grouping and join keys both treat NaN as equal to NaN and -0.0
+        # as equal to 0.0, so no copy is lost). Repeated vectors need no
+        # distinct: they only multiply a count, and k = 1 asks for 0.
+        cand = local.select(*dim_cols)
+        keep = _verify_candidates(cand, cand, n_local, dim_signs, dominator_counts, 1, blocked=True)
+        return local.join(keep, on=dim_cols, how="left_semi").select(*df.columns)
 
     # Tree-reduce the union of local skylines down to one partition.
     # The final merge MUST be a single partition (global dominance needs
     # every surviving candidate in one place — the reference's single
     # reducer, /root/reference/Skyline.java:414), but on anti-correlated
     # data the union of local skylines can be huge, so intermediate
-    # levels bound each merge task's fan-in.
-    # auto guard: materialize the (small) local skyline once and
-    # measure it; widths then cap rows-per-merge-task. The persist
-    # means the local pass is not recomputed by the merge.
-    local = _persist_tracked(local)
-    n_local = local.count()
+    # levels bound each merge task's fan-in: widths cap
+    # rows-per-merge-task.
     widths: list[int] = []
     w = -(-n_local // merge_batch_rows)  # ceil
     while w > 1:
@@ -274,102 +287,125 @@ def skyline(
     return current.repartition(1).mapInArrow(fn, df.schema)
 
 
-def _blocked_merge(local: DataFrame, dim_signs: list[tuple[str, float]], blocked_rows: int) -> DataFrame:
-    """Distributed global verification of local-skyline candidates with
-    no single-partition stage (see ``skyline(merge="blocked")``).
-
-    Plan: persist the local-skyline candidates and count them (the one
-    sizing job — it fills the cache every later job reuses, so the
-    kernel pass runs once), hash rows into B blocks, cogroup every
-    (candidate-block i, opponent-block j) pair in its own task, emit the
-    ids of dominated candidates, anti-join them away. The pair (i, i)
-    also removes intra-block dominance between rows that came from
-    different source partitions. Strict dominance keeps all ties, same
-    as the kernel.
-
-    Row-id stability: the id is ``md5(to_json(struct(*row)))`` — a pure
-    function of the row's CONTENT, so it is identical across the
-    dominated-ids job and the final anti-join no matter how a lost
-    partition is recomputed, even when the upstream lineage contains a
-    shuffle or aggregate with nondeterministic within-partition row
-    order (positional ids like ``monotonically_increasing_id`` diverge
-    exactly there). Duplicate rows collapse onto one id, which is
-    CORRECT here: dominance is a function of the dimension values alone,
-    so identical rows share dominated-fate — either every copy is
-    dominated or none is — and an identical opponent never strictly
-    dominates (ties are kept, same as the kernel). 128-bit md5 makes
-    cross-row collisions a non-issue at any candidate count; ``to_json``
-    includes field names, so two different rows can only serialize
-    equal if they ARE equal. The persist() below is purely a perf pin
-    (no eager ``localCheckpoint`` — that was a 6x wall-clock overhead
-    at sf0.1; see PLANS.md §15); correctness no longer leans on it.
-    """
-    d = len(dim_signs)
-    local = _persist_tracked(local)
-    n_cand = local.count()
-    if n_cand == 0:
-        return local
-    n_blocks = max(1, -(-n_cand // blocked_rows))
-    tagged = local.withColumn(
-        "__rid", F.md5(F.to_json(F.struct(*[F.col(c) for c in local.columns])))
-    )
-
-    sexprs = [
-        (F.col(c).cast("double") * F.lit(s)).alias(f"__s{k}")
-        for k, (c, s) in enumerate(dim_signs)
-    ]
-    slim = tagged.select("__rid", *sexprs).withColumn(
-        "__blk", F.pmod(F.hash("__rid"), F.lit(n_blocks)).cast("int")
-    )
-    opp = F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("__opp")
-    # candidates keyed by (own block, opponent block); opponents keyed by
-    # (candidate block, own block) — cogroup co-locates each pair
-    cand_side = slim.select("*", opp)
-    opp_side = slim.select("*", opp).withColumnRenamed("__opp", "__cand_blk")
-
-    scols = [f"__s{k}" for k in range(d)]
-
-    def dominated_ids(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return pd.DataFrame({"__rid": pd.Series([], dtype="object")})
-        lv = left[scols].to_numpy(dtype=np.float64)
-        rv = right[scols].to_numpy(dtype=np.float64)
-        out = np.zeros(len(lv), dtype=bool)
-        # chunk candidates so each pairwise bool matrix stays ~16 MB
-        step = max(1, (1 << 24) // max(len(rv), 1))
-        for s0 in range(0, len(lv), step):
-            out[s0 : s0 + step] = dominance_matrix(rv, lv[s0 : s0 + step]).any(axis=1)
-        return pd.DataFrame({"__rid": left["__rid"].to_numpy()[out]})
-
-    dominated = (
-        cand_side.groupBy("__blk", "__opp")
-        .cogroup(opp_side.groupBy("__cand_blk", "__blk"))
-        .applyInPandas(dominated_ids, "__rid string")
-        .distinct()
-    )
-    return tagged.join(dominated, "__rid", "left_anti").drop("__rid")
+#: candidate sets up to this many vectors are verified broadcast-and-count
+_BROADCAST_ROWS = 1_000_000
+#: rows per candidate block and per data block on the blocked verify path
+_CAND_BLOCK_ROWS = 65_536
+_DATA_BLOCK_ROWS = 1 << 20
 
 
-def _dominator_counts(cand: np.ndarray, rows: np.ndarray) -> np.ndarray:
-    """For each candidate vector, how many of ``rows`` strictly dominate
-    it (min-normalized values; duplicates count, ties don't dominate)."""
-    counts = np.zeros(len(cand), dtype=np.int64)
-    # chunk rows so each pairwise bool matrix stays ~16 MB
-    step = max(1, (1 << 24) // max(len(cand), 1))
-    for s0 in range(0, len(rows), step):
-        counts += dominance_matrix(rows[s0 : s0 + step], cand).sum(axis=1)
-    return counts
+def _local_filter_fn(dim_signs: list[tuple[str, float]], count_fn, k: int):
+    """mapInArrow function: rows that fewer than ``k`` rows of their own
+    partition match under ``count_fn``. Superset-safe for every caller:
+    a row with fewer than ``k`` matches globally has fewer in its own
+    partition. The partition is buffered, since the count needs
+    within-partition pairs (a Spark partition is sized to memory)."""
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        parts = [pa.Table.from_batches([b]) for b in batches if b.num_rows]
+        if not parts:
+            return
+        tbl = pa.concat_tables(parts).combine_chunks()
+        vals = _arrow_matrix(tbl, dim_signs)
+        out = tbl.filter(pa.array(count_fn(vals, vals, k) < k))
+        if out.num_rows:
+            yield from out.to_batches()
+
+    return fn
 
 
-def skyline_kband(
-    df: DataFrame,
-    dims: DimSpec,
+def _verify_candidates(
+    clean: DataFrame,
+    cand: DataFrame,
+    n_cand: int,
+    dim_signs: list[tuple[str, float]],
+    count_fn,
     k: int,
     *,
-    broadcast_rows: int = 1_000_000,
-    cand_block_rows: int = 65_536,
-    data_block_rows: int = 1 << 20,
+    blocked: bool = False,
 ) -> DataFrame:
+    """The dimension vectors of ``cand`` (``n_cand`` rows, distinct
+    unless ``k == 1``) that fewer than ``k`` rows of ``clean`` match
+    under ``count_fn(cand_values, row_values, cap)``, whose counts need
+    only be exact below ``cap``. Returns the dimension columns; callers
+    semi-join on them.
+
+    Two physical paths:
+
+    - ``n_cand <= _BROADCAST_ROWS``: the candidate vectors are broadcast
+      and ONE distributed pass computes map-side partial counts (counts,
+      not rows, cross the wire). The result is hinted for a broadcast
+      join.
+    - larger, or ``blocked=True``: candidates hashed into B blocks, data
+      into D blocks, every (B, D) pair cogrouped in its own task and the
+      partial counts summed per vector. No driver materialization, and
+      no task ever holds more than one block pair. Shuffle cost is
+      B×|data| + D×|cand| rows of dimension columns only.
+    """
+    spark = clean.sparkSession
+    dim_cols = [c for c, _ in dim_signs]
+    if not blocked and n_cand <= _BROADCAST_ROWS:
+        # Arrow on both sides keeps timestamp units identical to the
+        # executor-side _arrow_matrix conversion
+        cand_tbl = cand.toArrow()
+        b_cand = spark.sparkContext.broadcast(_arrow_matrix(cand_tbl, dim_signs))
+
+        def partial_counts(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            c = b_cand.value
+            total = np.zeros(len(c), dtype=np.int64)
+            for batch in batches:
+                rows = _arrow_matrix(pa.Table.from_batches([batch]), dim_signs)
+                live = np.flatnonzero(total < k)
+                total[live] += count_fn(c[live], rows, k)
+            idx = np.flatnonzero(total)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(idx, pa.int64()), pa.array(total[idx])], names=["__idx", "__cnt"]
+            )
+
+        totals = (
+            clean.select(*dim_cols)
+            .mapInArrow(partial_counts, "__idx long, __cnt long")
+            .groupBy("__idx")
+            .agg(F.sum("__cnt").alias("__cnt"))
+            .toArrow()
+        )
+        n_match = np.zeros(cand_tbl.num_rows, dtype=np.int64)
+        n_match[totals["__idx"].to_numpy()] = totals["__cnt"].to_numpy()
+        keep = cand_tbl.filter(pa.array(n_match < k))
+        return F.broadcast(spark.createDataFrame(keep, schema=cand.schema))
+
+    n_data = n_cand if clean is cand else clean.count()
+    B = max(1, -(-n_cand // _CAND_BLOCK_ROWS))
+    D = max(1, -(-n_data // _DATA_BLOCK_ROWS))
+
+    def blocks(side: DataFrame, own: str, n_own: int, other: str, n_other: int) -> DataFrame:
+        # hashed into its own block, replicated to every block of the other side
+        return side.select(
+            *dim_cols,
+            F.pmod(F.hash(*dim_cols), F.lit(n_own)).cast("int").alias(own),
+            F.explode(F.sequence(F.lit(0), F.lit(n_other - 1))).alias(other),
+        )
+
+    def pair_counts(left: pa.Table, right: pa.Table) -> pa.Table:
+        cnt = count_fn(_arrow_matrix(left, dim_signs), _arrow_matrix(right, dim_signs), k)
+        return left.select(dim_cols).append_column("__cnt", pa.array(cnt, pa.int64()))
+
+    out_schema = T.StructType(
+        [clean.schema[c] for c in dim_cols] + [T.StructField("__cnt", T.LongType(), False)]
+    )
+    return (
+        blocks(cand, "__cblk", B, "__dblk", D)
+        .groupBy("__cblk", "__dblk")
+        .cogroup(blocks(clean, "__dblk", D, "__cblk", B).groupBy("__cblk", "__dblk"))
+        .applyInArrow(pair_counts, out_schema)
+        .groupBy(*dim_cols)
+        .agg(F.sum("__cnt").alias("__cnt"))
+        .where(F.col("__cnt") < k)
+        .select(*dim_cols)
+    )
+
+
+def skyline_kband(df: DataFrame, dims: DimSpec, k: int) -> DataFrame:
     """k-skyband: rows dominated by FEWER than ``k`` rows (k=1 is the
     skyline). The classic relaxation for "top candidates with slack".
 
@@ -378,22 +414,12 @@ def skyline_kband(
     union of per-partition k-skybands is a superset of the answer.
     Phase 1 computes that candidate set (distributed; persisted, never
     collected wholesale). Phase 2 counts each candidate's dominators in
-    the full data by size:
-
-    - ``|cand| <= broadcast_rows``: the candidate *vectors* are
-      broadcast and ONE distributed pass computes map-side partial
-      counts (counts, not rows, cross the wire).
-    - larger (anti-correlated data can make the candidate set O(n)):
-      fully distributed two-sided blocked counting — candidates hashed
-      into B blocks, data into D blocks, every (B, D) pair cogrouped in
-      its own task (the ``_blocked_merge`` pattern), partial counts
-      summed per candidate vector. No driver materialization and no
-      task ever holds more than one block pair.
+    the full data with ``_verify_candidates``, which picks a broadcast
+    or a blocked path from the candidate count.
 
     The final filter is a semi-join of ``df`` on the qualifying
     vectors, so duplicates of qualifying rows all survive (ties never
-    dominate). The broadcast hint is only applied on the small path;
-    the blocked path lets AQE pick the join strategy.
+    dominate).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -401,135 +427,13 @@ def skyline_kband(
     dim_cols = [c for c, _ in dim_signs]
     clean = _drop_null_dims(df, dim_cols)
 
-    def local_kband(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # k-band needs within-partition dominator counts, so the
-        # partition is buffered (a Spark partition is sized to memory)
-        parts = [pa.Table.from_batches([b]) for b in batches if b.num_rows]
-        if not parts:
-            return
-        tbl = pa.concat_tables(parts).combine_chunks()
-        vals = _arrow_matrix(tbl, dim_signs)
-        keep = _dominator_counts(vals, vals) < k
-        out = tbl.filter(pa.array(keep))
-        if out.num_rows:
-            yield from out.to_batches()
-
-    cand_rows = _persist_tracked(
-        clean.mapInArrow(local_kband, df.schema).select(*dim_cols).distinct()
-    )
-    n_cand = cand_rows.count()
+    local = clean.mapInArrow(_local_filter_fn(dim_signs, dominator_counts, k), df.schema)
+    cand = _persist_tracked(local.select(*dim_cols).distinct())
+    n_cand = cand.count()
     if n_cand == 0:
         return clean.limit(0)
-
-    if n_cand <= broadcast_rows:
-        qdf = _kband_count_broadcast(clean, cand_rows, dim_signs, k)
-        return clean.join(F.broadcast(qdf), on=dim_cols, how="left_semi")
-    qdf = _kband_count_blocked(
-        clean, cand_rows, dim_signs, k, n_cand, cand_block_rows, data_block_rows
-    )
-    return clean.join(qdf, on=dim_cols, how="left_semi")
-
-
-def _kband_count_broadcast(
-    clean: DataFrame, cand_rows: DataFrame, dim_signs: list[tuple[str, float]], k: int
-) -> DataFrame:
-    """Phase-2 dominator counting for a driver-small candidate set."""
-    spark = clean.sparkSession
-    dim_cols = [c for c, _ in dim_signs]
-    # toArrow keeps timestamp units identical to the executor-side
-    # _arrow_matrix conversion (a pandas round-trip would be in ns)
-    cand_tbl = cand_rows.toArrow()
-    cand = _arrow_matrix(cand_tbl, dim_signs)
-    cand_pdf = cand_tbl.to_pandas()
-    b_cand = spark.sparkContext.broadcast(cand)
-
-    count_schema = T.StructType(
-        [T.StructField("__idx", T.LongType()), T.StructField("__cnt", T.LongType())]
-    )
-
-    def partial_counts(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        c = b_cand.value
-        total = np.zeros(len(c), dtype=np.int64)
-        seen = False
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            seen = True
-            tbl = pa.Table.from_batches([batch])
-            total += _dominator_counts(c, _arrow_matrix(tbl, dim_signs))
-        if seen:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.arange(len(c))), pa.array(total)],
-                schema=pa.schema([("__idx", pa.int64()), ("__cnt", pa.int64())]),
-            )
-
-    totals = (
-        clean.select(*dim_cols)
-        .mapInArrow(partial_counts, count_schema)
-        .groupBy("__idx")
-        .agg(F.sum("__cnt").alias("n_dom"))
-        .collect()
-    )
-    n_dom = np.zeros(len(cand), dtype=np.int64)
-    for r in totals:
-        n_dom[r["__idx"]] = r["n_dom"]
-    return spark.createDataFrame(cand_pdf.loc[n_dom < k, dim_cols])
-
-
-def _kband_count_blocked(
-    clean: DataFrame,
-    cand_rows: DataFrame,
-    dim_signs: list[tuple[str, float]],
-    k: int,
-    n_cand: int,
-    cand_block_rows: int,
-    data_block_rows: int,
-) -> DataFrame:
-    """Phase-2 dominator counting with no driver-side candidate
-    materialization: every (candidate-block, data-block) pair is
-    counted in its own cogroup task; per-pair partial counts are summed
-    per candidate vector. Shuffle cost is B×|data| + D×|cand| rows of
-    dimension columns only — the price of exact counting at O(n)
-    candidate cardinality, paid distributed instead of on the driver."""
-    dim_cols = [c for c, _ in dim_signs]
-    n_data = clean.count()
-    B = max(1, -(-n_cand // cand_block_rows))
-    D = max(1, -(-n_data // data_block_rows))
-
-    cand_side = (
-        cand_rows.withColumn("__cblk", F.pmod(F.hash(*dim_cols), F.lit(B)).cast("int"))
-        .select("*", F.explode(F.sequence(F.lit(0), F.lit(D - 1))).alias("__dblk"))
-    )
-    data_side = (
-        clean.select(*dim_cols)
-        .withColumn("__dblk", F.pmod(F.hash(*dim_cols), F.lit(D)).cast("int"))
-        .select("*", F.explode(F.sequence(F.lit(0), F.lit(B - 1))).alias("__cblk"))
-    )
-
-    out_fields = [clean.schema[c] for c in dim_cols] + [
-        T.StructField("__cnt", T.LongType(), False)
-    ]
-    out_schema = T.StructType(out_fields)
-
-    def pair_counts(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        cand_pdf = left.drop(columns=["__cblk", "__dblk"])
-        cmat = _values_matrix(cand_pdf, dim_signs)
-        dmat = _values_matrix(right, dim_signs)
-        out = cand_pdf.copy()
-        out["__cnt"] = _dominator_counts(cmat, dmat)
-        return out
-
-    partial = (
-        cand_side.groupBy("__cblk", "__dblk")
-        .cogroup(data_side.groupBy("__cblk", "__dblk"))
-        .applyInPandas(pair_counts, out_schema)
-    )
-    return (
-        partial.groupBy(*dim_cols)
-        .agg(F.sum("__cnt").alias("__n_dom"))
-        .where(F.col("__n_dom") < k)
-        .select(*dim_cols)
-    )
+    keep = _verify_candidates(clean, cand, n_cand, dim_signs, dominator_counts, k)
+    return clean.join(keep, on=dim_cols, how="left_semi")
 
 
 def grouped_combine_fn(key_cols: Sequence[str], dim_signs: list[tuple[str, float]], flush_rows: int = 1 << 19):

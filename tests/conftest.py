@@ -15,3 +15,30 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="module", params=["timestamp", "decimal(12,2)"])
+def typed_points(spark, request):
+    """(dtype, rows, DataFrame): 200 rows (id, x, y) whose x is a
+    ``timestamp`` or ``decimal(12,2)`` column equal to a constant scale
+    of an integer code ``a`` (plus an offset); ``rows`` holds the plain
+    (id, a, y) floats for numpy oracles."""
+    import datetime
+    import decimal
+
+    import numpy as np
+
+    dtype = request.param
+    rng = np.random.RandomState(3)
+    a = rng.randint(0, 40, 200)
+    y = rng.randint(0, 40, 200).astype(float)
+    base = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
+    if dtype == "timestamp":
+        # 1_000_007 microseconds per code step
+        xs = [base + datetime.timedelta(seconds=int(v), microseconds=7 * int(v)) for v in a]
+    else:
+        xs = [decimal.Decimal(int(v)) / 4 for v in a]
+    df = spark.createDataFrame(
+        [(i, xs[i], float(y[i])) for i in range(len(a))], f"id int, x {dtype}, y double"
+    ).repartition(5)
+    return dtype, [(i, float(a[i]), float(y[i])) for i in range(len(a))], df

@@ -179,3 +179,23 @@ def test_skyline_mask_matches_brute_force_property(data, d, chunk, window_chunk)
 
 def test_all_identical_large():
     assert skyline_mask(np.ones((5000, 9))).all()
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    data=st.data(),
+    d=st.integers(1, 9),
+    cap=st.sampled_from([None, 1, 3]),
+    cells=st.sampled_from([1, 7, _kernel._COUNT_CELLS]),
+)
+def test_dominator_counts_matches_scalar(data, d, cap, cells):
+    """min(true count, cap) of the rows strictly dominating each
+    candidate, under any row chunking (``cells`` bounds one matrix)."""
+    cand = data.draw(_matrix(d), label="cand")
+    rows = data.draw(_matrix(d), label="rows")
+    with mock.patch.object(_kernel, "_COUNT_CELLS", cells):
+        got = _kernel.dominator_counts(cand, rows, cap=cap)
+    want = [sum(dominates(r, c) for r in rows) for c in cand]
+    if cap is not None:
+        want = [min(w, cap) for w in want]
+    assert got.tolist() == want

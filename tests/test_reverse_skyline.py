@@ -2,10 +2,14 @@
 
 from __future__ import annotations
 
+import importlib
+
 import numpy as np
 import pytest
 
 from skylinemapreducehadoop_spark.operators.reverse import reverse_skyline
+
+S = importlib.import_module("skylinemapreducehadoop_spark.operators.skyline")
 
 
 def _oracle_ids(rows, q):
@@ -53,13 +57,13 @@ def test_reverse_skyline_query_on_a_point(spark, points):
     assert rows[3][0] in got and 900 in got  # both duplicates survive
 
 
-def test_reverse_skyline_blocked_path(spark, points):
+def test_reverse_skyline_blocked_path(spark, points, monkeypatch):
     rows, df = points
     q = (5.0, 5.0)
-    blocked = reverse_skyline(
-        df, ["x", "y"], q, broadcast_rows=2, cand_block_rows=16, data_block_rows=64
-    )
-    got = sorted(r["id"] for r in blocked.collect())
+    monkeypatch.setattr(S, "_BROADCAST_ROWS", 2)
+    monkeypatch.setattr(S, "_CAND_BLOCK_ROWS", 16)
+    monkeypatch.setattr(S, "_DATA_BLOCK_ROWS", 64)
+    got = sorted(r["id"] for r in reverse_skyline(df, ["x", "y"], q).collect())
     assert got == _oracle_ids(rows, q)
 
 
@@ -96,3 +100,37 @@ def test_dynamic_skyline_matches_bruteforce_reference(spark):
         for r in dynamic_skyline(df, ["x", "y"], q, strategy="bruteforce").collect()
     )
     assert got_qt == got
+
+
+def test_reverse_skyline_empty_after_verify(spark):
+    """Rows survive both local passes (each partition alone has no
+    violator) but none survives the full verify: every value is
+    violated, so the answer is empty rather than an error."""
+    rows = [(0, 1.5), (1, 1.2), (2, 1.0)]
+    df = spark.sparkContext.parallelize(rows, 2).toDF("id int, x double")
+    assert reverse_skyline(df, ["x"], (0.0,)).collect() == []
+    assert _oracle_ids([(i, x, 0.0) for i, x in rows], (0.0, 0.0)) == []
+
+
+def test_reverse_skyline_blocked_matches_broadcast_on_typed_dims(spark, monkeypatch, typed_points):
+    """Timestamps verify as epoch microseconds and decimals as floats on
+    both paths; both x encodings scale the integer code ``a`` by a
+    constant, so the oracle runs on the codes."""
+    import datetime
+
+    dtype, rows, df = typed_points
+    qa = 20.0
+    if dtype == "timestamp":
+        base = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc).timestamp()
+        qx = base * 1e6 + qa * 1_000_007
+    else:
+        qx = qa / 4
+    want = _oracle_ids(rows, (qa, 20.0))
+
+    via_broadcast = sorted(r["id"] for r in reverse_skyline(df, ["x", "y"], (qx, 20.0)).collect())
+    monkeypatch.setattr(S, "_BROADCAST_ROWS", 0)
+    monkeypatch.setattr(S, "_CAND_BLOCK_ROWS", 4)
+    monkeypatch.setattr(S, "_DATA_BLOCK_ROWS", 32)
+    blocked = sorted(r["id"] for r in reverse_skyline(df, ["x", "y"], (qx, 20.0)).collect())
+    assert blocked == via_broadcast == want
+    assert want

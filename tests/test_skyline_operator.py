@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import datetime
+import importlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,6 +15,9 @@ from skylinemapreducehadoop_spark.operators.skyline import (
     skyline_layers,
 )
 from skylinemapreducehadoop_spark.sources.tables import load_table
+
+# the module, not the ``skyline`` function the package re-exports
+S = importlib.import_module("skylinemapreducehadoop_spark.operators.skyline")
 
 
 def _ids(df):
@@ -98,9 +102,9 @@ def test_kband_matches_bruteforce(spark):
     )
 
 
-def test_kband_blocked_path_anticorrelated(spark):
+def test_kband_blocked_path_anticorrelated(spark, monkeypatch):
     """Anti-correlated data makes the candidate set ≈ the whole input;
-    a tiny broadcast_rows forces the fully distributed blocked counting
+    a tiny broadcast limit forces the fully distributed blocked counting
     path (no driver-side candidate materialization). Results must match
     the numpy dominator-count oracle and the broadcast path exactly."""
     import numpy as np
@@ -118,17 +122,18 @@ def test_kband_blocked_path_anticorrelated(spark):
     n_dom = (le & lt).sum(axis=0)
 
     for k in (1, 4):
-        blocked = skyline_kband(
-            df, dims, k, broadcast_rows=50, cand_block_rows=64, data_block_rows=128
-        )
-        got = sorted(r["id"] for r in blocked.collect())
+        with monkeypatch.context() as m:
+            m.setattr(S, "_BROADCAST_ROWS", 50)
+            m.setattr(S, "_CAND_BLOCK_ROWS", 64)
+            m.setattr(S, "_DATA_BLOCK_ROWS", 128)
+            got = sorted(r["id"] for r in skyline_kband(df, dims, k).collect())
         want = sorted(rows[i][0] for i in range(len(rows)) if n_dom[i] < k)
         assert got == want, k
         via_broadcast = sorted(r["id"] for r in skyline_kband(df, dims, k).collect())
         assert got == via_broadcast, k
 
 
-def test_blocked_merge_matches_bruteforce(spark):
+def test_blocked_merge_matches_bruteforce(spark, monkeypatch):
     """The fully distributed merge (no single-partition stage) must
     agree with brute force — including on anti-correlated data where the
     skyline is everything, with duplicates, and with tiny blocks forcing
@@ -139,7 +144,9 @@ def test_blocked_merge_matches_bruteforce(spark):
     df = spark.createDataFrame(rows, "id int, x double, y double").repartition(7)
     dims = [("x", "min"), ("y", "min")]
 
-    blocked = skyline(df, dims, merge="blocked", blocked_rows=40)
+    monkeypatch.setattr(S, "_CAND_BLOCK_ROWS", 40)
+    monkeypatch.setattr(S, "_DATA_BLOCK_ROWS", 40)
+    blocked = skyline(df, dims, merge="blocked")
     plan = blocked._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan  # truly no single-partition stage
 
@@ -148,14 +155,12 @@ def test_blocked_merge_matches_bruteforce(spark):
     assert got == want
 
 
-def test_blocked_merge_shuffle_rooted_input_and_full_duplicates(spark):
-    """Regression for the row-id stability hazard: the blocked merge's
-    row id is content-derived (md5 of the row), so an input whose
-    lineage contains a SHUFFLE/aggregate (nondeterministic
-    within-partition row order on recompute) is still merged correctly,
-    and FULL duplicate rows (identical in every column) share
-    dominated-fate: all copies of a non-dominated duplicate survive,
-    all copies of a dominated one go."""
+def test_blocked_merge_shuffle_rooted_input_and_full_duplicates(spark, monkeypatch):
+    """An input whose lineage contains a SHUFFLE/aggregate
+    (nondeterministic within-partition row order on recompute) is still
+    merged correctly, and FULL duplicate rows (identical in every
+    column) share dominated-fate: all copies of a non-dominated
+    duplicate survive, all copies of a dominated one go."""
     from pyspark.sql import functions as F
 
     rows = [(i % 40, float(i % 20), float(19 - i % 20)) for i in range(400)]
@@ -169,7 +174,9 @@ def test_blocked_merge_shuffle_rooted_input_and_full_duplicates(spark):
         .drop("copy")  # 2 identical rows per (k, x, y) — full duplicates
     )
     dims = [("x", "min"), ("y", "min")]
-    got = sorted(map(tuple, skyline(agg, dims, merge="blocked", blocked_rows=30).collect()))
+    monkeypatch.setattr(S, "_CAND_BLOCK_ROWS", 30)
+    monkeypatch.setattr(S, "_DATA_BLOCK_ROWS", 30)
+    got = sorted(map(tuple, skyline(agg, dims, merge="blocked").collect()))
     want = sorted(map(tuple, skyline(agg, dims, strategy="bruteforce").collect()))
     assert got == want
     # every surviving duplicate kept BOTH copies
@@ -276,3 +283,104 @@ def test_quadtree_matches_on_skewed_groups(spark):
     tp = _ids(skyline(df, dims))
     qt = _ids(skyline(df, dims, strategy="quadtree", quadtree_opts={"maxp": 32}))
     assert tp == qt
+
+
+def test_kband_blocked_matches_broadcast_on_typed_dims(spark, monkeypatch, typed_points):
+    """The blocked path reads dimensions from Arrow (timestamps as
+    microseconds, decimals as floats) and must agree with the broadcast
+    path and with a dominator-count oracle on the integer codes."""
+    import numpy as np
+
+    _, rows, df = typed_points
+    dims = [("x", "min"), ("y", "max")]
+    vals = np.array([[r[1], -r[2]] for r in rows])
+    le = (vals[:, None, :] <= vals[None, :, :]).all(axis=2)
+    lt = (vals[:, None, :] < vals[None, :, :]).any(axis=2)
+    n_dom = (le & lt).sum(axis=0)
+    k = 3
+    want = sorted(r[0] for r, c in zip(rows, n_dom) if c < k)
+
+    via_broadcast = _ids(skyline_kband(df, dims, k))
+    monkeypatch.setattr(S, "_BROADCAST_ROWS", 0)
+    monkeypatch.setattr(S, "_CAND_BLOCK_ROWS", 8)
+    monkeypatch.setattr(S, "_DATA_BLOCK_ROWS", 64)
+    blocked = _ids(skyline_kband(df, dims, k))
+    assert blocked == via_broadcast == want
+    assert len(want) > k
+
+
+def test_blocked_merge_equals_tree_on_special_values(spark, monkeypatch):
+    """NaN, ±0.0, ±inf and full duplicates: the blocked merge verifies
+    distinct vectors and semi-joins back, so it leans on Spark's
+    distinct and join keys treating NaN as equal to NaN and -0.0 as
+    equal to 0.0 — every copy must come back exactly as the tree merge
+    keeps it."""
+    import itertools
+    import math
+
+    inf, nan = float("inf"), float("nan")
+    xs = [nan, -0.0, 0.0, 1.0, inf]
+    ys = [nan, -inf, -0.0, 0.0, 1.0, inf]
+    rows = [(i, x, y) for i, (x, y) in enumerate(itertools.product(xs, ys))]
+    rows += rows[::3]  # full duplicates
+    df = spark.createDataFrame(rows, "id int, x double, y double").repartition(6)
+    monkeypatch.setattr(S, "_CAND_BLOCK_ROWS", 4)
+    monkeypatch.setattr(S, "_DATA_BLOCK_ROWS", 8)
+    for dims in ([("x", "min"), ("y", "min")], [("x", "min"), ("y", "max")]):
+        tree = skyline(df, dims)
+        blocked = skyline(df, dims, merge="blocked")
+        assert blocked.columns == tree.columns == df.columns
+        assert _ids(blocked) == _ids(tree)
+        kept = blocked.collect()
+        assert any(math.isnan(r["x"]) for r in kept)
+        zeros = {math.copysign(1.0, r["x"]) for r in kept if r["x"] == 0.0}
+        assert zeros == {-1.0, 1.0}, dims
+
+
+def test_verify_operators_start_no_more_jobs(spark, monkeypatch):
+    """Calling each operator runs only its sizing jobs eagerly. Jobs are
+    counted per job group with the status tracker; the bounds are the
+    counts of the per-operator verify code this shared path replaced."""
+    from skylinemapreducehadoop_spark.operators.reverse import reverse_skyline
+
+    n = 300
+    rows = [(i, float(i % 150), float(149 - i % 150)) for i in range(n)]
+    rows += [(1000 + i, float(i), float(i)) for i in range(50)]
+    df = spark.createDataFrame(rows, "id int, x double, y double").repartition(7)
+    dims = [("x", "min"), ("y", "min")]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(tag, call):
+        sc.setJobGroup(tag, tag)
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(tracker.getJobIdsForGroup(tag))
+
+    counts = {
+        "kband_broadcast": jobs("kband-broadcast", lambda: skyline_kband(df, dims, 3)),
+        "reverse_broadcast": jobs(
+            "reverse-broadcast", lambda: reverse_skyline(df, ["x", "y"], (5.0, 5.0))
+        ),
+        "skyline_blocked": jobs("skyline-blocked", lambda: skyline(df, dims, merge="blocked")),
+    }
+    monkeypatch.setattr(S, "_BROADCAST_ROWS", 5)
+    monkeypatch.setattr(S, "_CAND_BLOCK_ROWS", 64)
+    monkeypatch.setattr(S, "_DATA_BLOCK_ROWS", 128)
+    counts["kband_blocked"] = jobs("kband-blocked", lambda: skyline_kband(df, dims, 3))
+    counts["reverse_blocked"] = jobs(
+        "reverse-blocked", lambda: reverse_skyline(df, ["x", "y"], (5.0, 5.0))
+    )
+    # adaptive execution runs one job per query stage, so a sizing
+    # action over a shuffle counts more than once
+    bounds = {
+        "kband_broadcast": 9,
+        "reverse_broadcast": 12,
+        "skyline_blocked": 3,
+        "kband_blocked": 4,
+        "reverse_blocked": 7,
+    }
+    assert all(counts[k] <= bounds[k] for k in bounds), counts
