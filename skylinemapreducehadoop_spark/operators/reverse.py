@@ -147,7 +147,6 @@ def dynamic_skyline(
     query_point: Sequence[float],
     *,
     strategy: str = "twophase",
-    **skyline_opts,
 ) -> DataFrame:
     """Skyline in the distance space centered at ``query_point``: the
     rows minimizing ``|x_i - q_i|`` per dimension under strict Pareto
@@ -156,8 +155,8 @@ def dynamic_skyline(
 
     Pure composition: project the absolute distances as temp columns
     and run the ordinary ``skyline`` operator over them, so every
-    strategy/merge path (twophase, quadtree, blocked merge) and its
-    scale properties apply unchanged. Tie semantics inherit from the
+    ``strategy`` (twophase, quadtree, bruteforce) and its scale
+    properties apply unchanged. Tie semantics inherit from the
     forward skyline: rows at identical distances both survive.
     """
     from skylinemapreducehadoop_spark.operators.skyline import skyline
@@ -175,5 +174,5 @@ def dynamic_skyline(
     proj = df
     for c, qi in zip(dim_cols, q):
         proj = proj.withColumn(tmp[c], F.abs(F.col(c) - F.lit(float(qi))))
-    out = skyline(proj, [(tmp[c], "min") for c in dim_cols], strategy=strategy, **skyline_opts)
+    out = skyline(proj, [(tmp[c], "min") for c in dim_cols], strategy=strategy)
     return out.drop(*tmp.values())

@@ -43,9 +43,8 @@ from __future__ import annotations
 from collections.abc import Iterator, Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -88,38 +87,51 @@ def normalize_dims(dims: DimSpec) -> list[tuple[str, float]]:
     return out
 
 
-def _values_matrix(pdf: pd.DataFrame, dim_signs: list[tuple[str, float]]) -> np.ndarray:
-    """Extract the (n, d) min-normalized float matrix from a pandas frame.
+def _arrow_matrix(tbl: "pa.Table | pa.RecordBatch", dim_signs: list[tuple[str, float]]) -> np.ndarray:
+    """(n, d) min-normalized float64 coordinates of the dimension
+    columns, read straight from Arrow (pass-through columns are never
+    touched). The one encoder of the skyline family; ``_signed_columns``
+    is its Spark-side twin and yields the same doubles bit for bit.
 
-    Timestamps/dates compare by their integer epoch representation;
-    everything else is cast to float64.
+    Coordinates: numbers and decimals as float64; ``timestamp`` as epoch
+    microseconds (``timestamp_ntz``: wall-clock epoch microseconds);
+    ``date`` as epoch days. Float64 is exact for integers within ±2^53
+    and decimals of at most 15 digits; beyond that distinct values can
+    round to one coordinate (int64 (2^53, 0) vs (2^53+1, 0) both survive).
     """
-    n = len(pdf)
-    arr = np.empty((n, len(dim_signs)), dtype=np.float64)
-    for j, (col, sign) in enumerate(dim_signs):
-        s = pdf[col]
-        if pd.api.types.is_datetime64_any_dtype(s):
-            vals = s.astype("int64").to_numpy(dtype=np.float64)
-        else:
-            vals = s.to_numpy(dtype=np.float64, na_value=np.nan)
-        arr[:, j] = sign * vals
-    return arr
-
-
-def _arrow_matrix(tbl: "pa.Table", dim_signs: list[tuple[str, float]]) -> np.ndarray:
-    """(n, d) min-normalized matrix straight from Arrow columns — no
-    pandas conversion, so non-dimension columns are never touched and
-    int64 values survive bit-exact (pandas would round-trip nullable
-    ints through float64, corrupting values above 2^53)."""
-    n = tbl.num_rows
-    arr = np.empty((n, len(dim_signs)), dtype=np.float64)
+    arr = np.empty((tbl.num_rows, len(dim_signs)), dtype=np.float64)
     for j, (col, sign) in enumerate(dim_signs):
         c = tbl.column(col)
-        if pa.types.is_timestamp(c.type) or pa.types.is_date(c.type):
-            c = c.cast(pa.int64())
-        vals = c.to_numpy(zero_copy_only=False).astype(np.float64)
-        arr[:, j] = sign * vals
+        if pa.types.is_timestamp(c.type):
+            c = c.cast(pa.timestamp("us", c.type.tz)).cast(pa.int64())
+        elif pa.types.is_date(c.type):
+            c = c.cast(pa.date32()).cast(pa.int32())
+        arr[:, j] = sign * c.to_numpy(zero_copy_only=False).astype(np.float64)
     return arr
+
+
+def _signed_columns(schema: T.StructType, dim_signs: list[tuple[str, float]]) -> list[Column]:
+    """``_arrow_matrix`` as Spark columns ``__s0 .. __s{d-1}``, equal bit for
+    bit. ``timestamp_ntz`` is built from its date and clock fields, not cast
+    through the session time zone, so no zone or DST gap moves it."""
+    out = []
+    for j, (c, sign) in enumerate(dim_signs):
+        col, dtype = F.col(c), schema[c].dataType
+        if isinstance(dtype, T.TimestampType):
+            v = F.unix_micros(col)
+        elif isinstance(dtype, T.TimestampNTZType):
+            v = (
+                F.unix_date(col.cast("date")).cast("long") * 86_400_000_000
+                + F.hour(col).cast("long") * 3_600_000_000
+                + F.minute(col).cast("long") * 60_000_000
+                + (F.extract(F.lit("SECOND"), col) * 1_000_000).cast("long")
+            )
+        elif isinstance(dtype, T.DateType):
+            v = F.unix_date(col)
+        else:
+            v = col
+        out.append((v.cast("double") * F.lit(sign)).alias(f"__s{j}"))
+    return out
 
 
 def _arrow_skyline(tbl: "pa.Table", dim_signs: list[tuple[str, float]]) -> "pa.Table":
@@ -128,18 +140,6 @@ def _arrow_skyline(tbl: "pa.Table", dim_signs: list[tuple[str, float]]) -> "pa.T
         return tbl
     mask = skyline_mask(_arrow_matrix(tbl, dim_signs))
     return tbl.filter(pa.array(mask))
-
-
-def pandas_skyline(pdf: pd.DataFrame, dim_signs: list[tuple[str, float]]) -> pd.DataFrame:
-    """Skyline of one in-memory pandas frame (rows with NULL dims dropped)."""
-    if len(pdf) == 0:
-        return pdf
-    cols = [c for c, _ in dim_signs]
-    pdf = pdf.dropna(subset=cols)
-    if len(pdf) == 0:
-        return pdf
-    mask = skyline_mask(_values_matrix(pdf, dim_signs))
-    return pdf.loc[mask]
 
 
 def _partition_skyline_fn(dim_signs: list[tuple[str, float]]):
@@ -182,14 +182,14 @@ def skyline(
     dims: DimSpec,
     *,
     strategy: str = "twophase",
-    merge_batch_rows: int = _MERGE_BATCH_ROWS,
     merge: str = "tree",
-    quadtree_opts: dict | None = None,
 ) -> DataFrame:
     """Pareto-optimal rows of ``df`` under per-dimension min/max directions.
 
     dims: sequence of ``(column, 'min'|'max')`` — the engine's query knob,
     mirroring the reference's per-dimension ``value_type`` directions.
+    Columns may be numeric, decimal, ``date``, ``timestamp`` or
+    ``timestamp_ntz`` (see ``_arrow_matrix`` for how each compares).
 
     strategy:
       - ``"twophase"`` (default): per-partition local skyline then
@@ -235,7 +235,7 @@ def skyline(
     if strategy == "quadtree":
         from skylinemapreducehadoop_spark.operators.quadtree import quadtree_skyline
 
-        return quadtree_skyline(clean, dim_signs, **(quadtree_opts or {}))
+        return quadtree_skyline(clean, dim_signs)
 
     if strategy != "twophase":
         raise ValueError(f"unknown strategy {strategy!r}")
@@ -276,7 +276,7 @@ def skyline(
     # levels bound each merge task's fan-in: widths cap
     # rows-per-merge-task.
     widths: list[int] = []
-    w = -(-n_local // merge_batch_rows)  # ceil
+    w = -(-n_local // _MERGE_BATCH_ROWS)  # ceil
     while w > 1:
         widths.append(int(w))
         w = -(-w // _MERGE_FAN_IN)
@@ -436,14 +436,18 @@ def skyline_kband(df: DataFrame, dims: DimSpec, k: int) -> DataFrame:
     return clean.join(keep, on=dim_cols, how="left_semi")
 
 
-def grouped_combine_fn(key_cols: Sequence[str], dim_signs: list[tuple[str, float]], flush_rows: int = 1 << 19):
+#: buffered rows before the map-side combine reduces its groups early
+_FLUSH_ROWS = 1 << 19
+
+
+def grouped_combine_fn(key_cols: Sequence[str], dim_signs: list[tuple[str, float]]):
     """``mapInArrow`` function: per-(partition, group) skyline — the
     map-side combine (the Spark analogue of the reference's
     combiner-equals-reducer, ``/root/reference/Skyline.java:408``).
     Correct by the combiner law within each group; after it, a
     ``groupBy(key_cols)`` shuffle carries only local Pareto sets.
 
-    ``flush_rows`` bounds buffered rows before an intermediate per-group
+    ``_FLUSH_ROWS`` bounds buffered rows before an intermediate per-group
     reduction, so memory is bounded on pathological partitions without
     paying a kernel run per Arrow batch.
     """
@@ -476,7 +480,7 @@ def grouped_combine_fn(key_cols: Sequence[str], dim_signs: list[tuple[str, float
                 continue
             buf.append(pa.Table.from_batches([batch]))
             buffered += batch.num_rows
-            if buffered >= flush_rows:
+            if buffered >= _FLUSH_ROWS:
                 buf = [_reduce_groups(pa.concat_tables(buf).combine_chunks())]
                 buffered = buf[0].num_rows
         if buf:
@@ -487,13 +491,7 @@ def grouped_combine_fn(key_cols: Sequence[str], dim_signs: list[tuple[str, float
     return local_combine
 
 
-def skyline_by(
-    df: DataFrame,
-    keys: Sequence[str] | str,
-    dims: DimSpec,
-    *,
-    combine: bool | None = None,
-) -> DataFrame:
+def skyline_by(df: DataFrame, keys: Sequence[str] | str, dims: DimSpec) -> DataFrame:
     """Grouped skyline: the Pareto set within each group of ``keys``.
 
     Composition the reference cannot express (its cell grouping is
@@ -504,15 +502,14 @@ def skyline_by(
     few groups × billions of rows) would funnel ALL data through a
     handful of group tasks.
 
-    ``combine=None`` decides from the deployment: the combine's win is
-    replacing a NETWORK shuffle of all rows with one of tiny Pareto
-    sets, paid for with one extra Arrow pass over the data. On a real
-    cluster that trade always wins at volume → combine. On ``local[*]``
-    there is no network — the "shuffle" is in-process memory/disk, so
-    the extra pass costs more than it saves (measured 2-3.5× slower on
-    600k-row scans AND joins) → direct groupBy, whose per-group kernel
-    tasks are the same work the combine's final stage would do anyway.
-    Pass ``combine=True/False`` to override either way.
+    The master decides whether the combine runs: its win is replacing a
+    NETWORK shuffle of all rows with one of tiny Pareto sets, paid for
+    with one extra Arrow pass over the data. On a real cluster that
+    trade always wins at volume → combine. On ``local[*]`` there is no
+    network — the "shuffle" is in-process memory/disk, so the extra pass
+    costs more than it saves (measured 2-3.5× slower on 600k-row scans
+    AND joins) → direct groupBy, whose per-group kernel tasks are the
+    same work the combine's final stage would do anyway.
     """
     if isinstance(keys, str):
         keys = [keys]
@@ -520,24 +517,20 @@ def skyline_by(
     clean = _drop_null_dims(df, [c for c, _ in dim_signs])
 
     key_cols = list(keys)
-    local_combine = grouped_combine_fn(key_cols, dim_signs)
 
     def per_group(tbl: pa.Table) -> pa.Table:
         return _arrow_skyline(tbl, dim_signs)
 
-    if combine is None:
-        # sparkContext is unavailable under Spark Connect — default to
-        # combine=True there (the cluster-shaped choice). Match only
-        # REAL local masters: 'local' / 'local[...]' — NOT
-        # 'local-cluster[...]', which simulates real executors with a
-        # network shuffle and wants the combine.
-        try:
-            master = (df.sparkSession.sparkContext.master or "").lower()
-        except Exception:
-            master = ""
-        combine = not (master == "local" or master.startswith("local["))
-    if combine:
-        local = clean.mapInArrow(local_combine, df.schema)
+    # sparkContext is unavailable under Spark Connect — combine there
+    # (the cluster-shaped choice). Match only REAL local masters:
+    # 'local' / 'local[...]' — NOT 'local-cluster[...]', which simulates
+    # real executors with a network shuffle and wants the combine.
+    try:
+        master = (df.sparkSession.sparkContext.master or "").lower()
+    except Exception:
+        master = ""
+    if not (master == "local" or master.startswith("local[")):
+        local = clean.mapInArrow(grouped_combine_fn(key_cols, dim_signs), df.schema)
         return local.groupBy(*key_cols).applyInArrow(per_group, df.schema)
     return clean.groupBy(*key_cols).applyInArrow(per_group, df.schema)
 

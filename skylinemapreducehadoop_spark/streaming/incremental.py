@@ -23,6 +23,7 @@ from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -31,8 +32,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from skylinemapreducehadoop_spark.operators._kernel import skyline_mask
 from skylinemapreducehadoop_spark.operators.skyline import (
     DimSpec,
+    _arrow_matrix,
     normalize_dims,
-    pandas_skyline,
 )
 
 
@@ -158,8 +159,9 @@ def incremental_skyline(
     """Exact streaming skyline per key via ``applyInPandasWithState``.
 
     Output (update mode): one row per key per batch with the current
-    Pareto set as an array of dimension-vectors. State = the flattened
-    min-normalized matrix (bounded by the Pareto set size).
+    Pareto set as an array of dimension-vectors, each dimension as
+    ``_arrow_matrix`` encodes it. State = the flattened min-normalized
+    matrix (bounded by the Pareto set size).
     """
     dim_signs = normalize_dims(dims)
     d = len(dim_signs)
@@ -184,14 +186,10 @@ def incremental_skyline(
             current = np.zeros((0, d))
 
         for pdf in batches:
+            pdf = pdf.dropna(subset=dim_cols)
             if len(pdf) == 0:
                 continue
-            vals = np.empty((len(pdf), d), dtype=np.float64)
-            for j, (c, s) in enumerate(dim_signs):
-                vals[:, j] = s * pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
-            vals = vals[~np.isnan(vals).any(axis=1)]
-            if len(vals) == 0:
-                continue
+            vals = _arrow_matrix(pa.Table.from_pandas(pdf[dim_cols], preserve_index=False), dim_signs)
             merged = np.vstack([current, vals])
             current = merged[skyline_mask(merged)]
 
@@ -229,7 +227,12 @@ class SkylineAccumulator:
             combined = batch_sky
         else:
             combined = pd.concat([self.current, batch_sky], ignore_index=True)
-        self.current = pandas_skyline(combined, self.dim_signs).reset_index(drop=True)
+        cols = [c for c, _ in self.dim_signs]
+        combined = combined.dropna(subset=cols)
+        if len(combined):
+            tbl = pa.Table.from_pandas(combined[cols], preserve_index=False)
+            combined = combined.loc[skyline_mask(_arrow_matrix(tbl, self.dim_signs))]
+        self.current = combined.reset_index(drop=True)
         return self.current
 
 

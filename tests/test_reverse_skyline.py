@@ -113,16 +113,18 @@ def test_reverse_skyline_empty_after_verify(spark):
 
 
 def test_reverse_skyline_blocked_matches_broadcast_on_typed_dims(spark, monkeypatch, typed_points):
-    """Timestamps verify as epoch microseconds and decimals as floats on
-    both paths; both x encodings scale the integer code ``a`` by a
-    constant, so the oracle runs on the codes."""
+    """Timestamps verify as epoch microseconds, dates as epoch days and
+    decimals as floats on both paths; every x encoding scales the
+    integer code ``a`` by a constant, so the oracle runs on the codes."""
     import datetime
 
     dtype, rows, df = typed_points
     qa = 20.0
-    if dtype == "timestamp":
-        base = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc).timestamp()
+    base = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc).timestamp()
+    if dtype.startswith("timestamp"):
         qx = base * 1e6 + qa * 1_000_007
+    elif dtype == "date":
+        qx = base / 86_400 + qa
     else:
         qx = qa / 4
     want = _oracle_ids(rows, (qa, 20.0))

@@ -18,6 +18,7 @@ from skylinemapreducehadoop_spark.sources.tables import load_table
 
 # the module, not the ``skyline`` function the package re-exports
 S = importlib.import_module("skylinemapreducehadoop_spark.operators.skyline")
+Q = importlib.import_module("skylinemapreducehadoop_spark.operators.quadtree")
 
 
 def _ids(df):
@@ -56,17 +57,18 @@ def test_duplicates_survive(spark):
     assert got == [1, 2]
 
 
-def test_auto_tree_merge_anticorrelated(spark):
+def test_auto_tree_merge_anticorrelated(spark, monkeypatch):
     """Worst case for the merge: anti-correlated data where the skyline
     is EVERY row. The auto guard must pick a multi-partition tree merge
-    (tiny merge_batch_rows forces it here) and still hash-match the
+    (a tiny _MERGE_BATCH_ROWS forces it here) and still hash-match the
     brute-force single-partition answer."""
     n = 400
     rows = [(i, float(i), float(n - i)) for i in range(n)]  # x+y const
     df = spark.createDataFrame(rows, "id int, x double, y double").repartition(8)
     dims = [("x", "min"), ("y", "min")]
 
-    auto = skyline(df, dims, merge_batch_rows=50)
+    monkeypatch.setattr(S, "_MERGE_BATCH_ROWS", 50)
+    auto = skyline(df, dims)
     plan = auto._jdf.queryExecution().executedPlan().toString()
     # local pass + >=1 intermediate tree level + final merge
     assert plan.count("MapInArrow") >= 3
@@ -281,8 +283,11 @@ def test_quadtree_matches_on_skewed_groups(spark):
     df = spark.createDataFrame(rows, "id int, x double, y double")
     dims = [("x", "min"), ("y", "min")]
     tp = _ids(skyline(df, dims))
-    qt = _ids(skyline(df, dims, strategy="quadtree", quadtree_opts={"maxp": 32}))
+    qt = _ids(skyline(df, dims, strategy="quadtree"))
     assert tp == qt
+    # the derived granularity still splits this input into several cells
+    _, _, tree = Q._profile_input(df, S.normalize_dims(dims))
+    assert isinstance(tree, dict) and len(tree["ch"]) > 1
 
 
 def test_kband_blocked_matches_broadcast_on_typed_dims(spark, monkeypatch, typed_points):
@@ -307,6 +312,81 @@ def test_kband_blocked_matches_broadcast_on_typed_dims(spark, monkeypatch, typed
     blocked = _ids(skyline_kband(df, dims, k))
     assert blocked == via_broadcast == want
     assert len(want) > k
+
+
+def test_strategies_match_oracle_on_typed_dims(spark, typed_points):
+    """Every strategy, the blocked merge and the grouped skyline read
+    timestamp, decimal, date and timestamp_ntz dimensions through one
+    encoder and agree with a numpy oracle on the integer codes."""
+    import numpy as np
+
+    _, rows, df = typed_points
+    dims = [("x", "min"), ("y", "max")]
+    ids = np.array([r[0] for r in rows])
+    vals = np.array([[r[1], -r[2]] for r in rows])
+
+    def oracle(mask):
+        v = vals[mask]
+        le = (v[:, None, :] <= v[None, :, :]).all(axis=2)
+        lt = (v[:, None, :] < v[None, :, :]).any(axis=2)
+        return sorted(ids[mask][~(le & lt).any(axis=0)].tolist())
+
+    want = oracle(np.ones(len(rows), dtype=bool))
+    for opts in ({"strategy": "twophase"}, {"strategy": "bruteforce"}, {"strategy": "quadtree"}, {"merge": "blocked"}):
+        assert _ids(skyline(df, dims, **opts)) == want, opts
+    grouped = _ids(skyline_by(df.withColumn("g", F.col("id") % 3), "g", dims))
+    assert grouped == sorted(i for g in range(3) for i in oracle(ids % 3 == g))
+    assert len(want) > 1
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_signed_columns_equal_arrow_matrix_bitwise(spark, tz):
+    """The Spark-side twin of the encoder yields the executor-side
+    doubles bit for bit under any session time zone: a wall-clock NTZ
+    value inside the 2024-03-10 New York DST gap and values before 1970
+    included (int64 beyond 2^53 rounds, but identically on both sides)."""
+    import decimal
+
+    import numpy as np
+    import pyarrow as pa
+
+    utc = datetime.timezone.utc
+    schema = "id int, i int, b bigint, f double, m decimal(12,2), d date, t timestamp, n timestamp_ntz"
+    rows = [
+        (0, 7, (1 << 53) + 1, -0.0, decimal.Decimal("1234567890.12"), datetime.date(2024, 3, 10),
+         datetime.datetime(2024, 3, 10, 7, 30, 0, 123457, utc), datetime.datetime(2024, 3, 10, 2, 30, 0, 123457)),
+        (1, -3, -(1 << 62) - 1, 0.0, decimal.Decimal("-0.05"), datetime.date(1969, 12, 31),
+         datetime.datetime(1969, 12, 31, 23, 59, 59, 999999, utc), datetime.datetime(1969, 7, 20, 20, 17, 40, 1)),
+        (2, 0, 0, 1e308, decimal.Decimal("0.10"), datetime.date(1900, 1, 1),
+         datetime.datetime(1900, 1, 1, 0, 0, 0, 1, utc), datetime.datetime(1900, 1, 1, 23, 59, 59, 999999)),
+        (3, 2**31 - 1, (1 << 53) - 1, 0.1, decimal.Decimal("9999999999.99"), datetime.date(2262, 4, 11),
+         datetime.datetime(2024, 11, 3, 5, 30, 0, 5, utc), datetime.datetime(2024, 11, 3, 1, 30, 0, 999999)),
+    ]
+    cols = ["i", "b", "f", "m", "d", "t", "n"]
+    dim_signs = [(c, 1.0 if j % 2 else -1.0) for j, c in enumerate(cols)] + [(c, 1.0) for c in cols]
+    out = ", ".join(f"s{j} double" for j in range(len(dim_signs)))
+
+    def encode(batches):
+        for b in batches:
+            m = S._arrow_matrix(b, dim_signs)
+            yield pa.RecordBatch.from_arrays([b.column("id")] + list(m.T), ["id"] + [f"s{j}" for j in range(m.shape[1])])
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        df = spark.createDataFrame(rows, schema).repartition(2)
+        jvm = sorted(df.select("id", *S._signed_columns(df.schema, dim_signs)).collect())
+        py = sorted(df.mapInArrow(encode, f"id int, {out}").collect())
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    assert [r[0] for r in jvm] == [r[0] for r in py] == [0, 1, 2, 3]
+    jvm_vals = np.array([r[1:] for r in jvm], dtype=np.float64)
+    py_vals = np.array([r[1:] for r in py], dtype=np.float64)
+    assert (jvm_vals.view(np.int64) == py_vals.view(np.int64)).all()
+    # the DST-gap NTZ value is its wall clock in epoch microseconds
+    gap = datetime.datetime(2024, 3, 10, 2, 30, 0, 123457) - datetime.datetime(1970, 1, 1)
+    assert py_vals[0, -1] == gap // datetime.timedelta(microseconds=1)
+    assert np.signbit(py_vals[0, len(cols) + 2])  # -0.0 keeps its sign under "min"
 
 
 def test_blocked_merge_equals_tree_on_special_values(spark, monkeypatch):
