@@ -11,9 +11,17 @@ search, text analysis, multimodal plumbing) such an engine needs at
 Everything here is DataFrame-first: logical plans are declared with the
 PySpark DataFrame/SQL API so Catalyst/Tungsten pick the physical
 strategy; only the dominance kernel itself (which Catalyst cannot
-express) drops to Arrow-vectorized pandas via ``mapInPandas`` /
-``applyInPandas``.
+express) drops to Arrow-batch NumPy via ``mapInArrow`` /
+``applyInArrow``.
+
+Importing the package first installs ``_worker.install_zipimport_hook``,
+so every Python worker that unpickles an engine function stops
+re-reading ``pyspark.zip`` at the start of each later task.
 """
+
+from skylinemapreducehadoop_spark._worker import install_zipimport_hook
+
+install_zipimport_hook()
 
 from skylinemapreducehadoop_spark.operators.skyline import (
     skyline,

@@ -6,7 +6,7 @@ Re-expresses the reference engine's three-job MapReduce pipeline
 
 Physical plan (strategy="twophase", the default):
 
-1. **Local pass** — ``mapInPandas`` computes a per-partition skyline.
+1. **Local pass** — ``mapInArrow`` computes a per-partition skyline.
    This is the Spark analogue of the reference's combiner-equals-reducer
    trick (``/root/reference/Skyline.java:408``): it is correct because
    ``skyline(skyline(A) ∪ skyline(B)) == skyline(A ∪ B)`` for any
@@ -554,11 +554,14 @@ def skyline_layers(df: DataFrame, dims: DimSpec, n_layers: int) -> DataFrame:
         # sky caches stay pinned (they ARE the output); each round's
         # remaining is unpersisted once the next round's is materialized
         # (layer 1's `remaining` is the caller's frame — never touched).
+        # The last remaining feeds the returned plan's last layer, so it
+        # is tracked like the sky caches instead of outliving the call.
         sky = _persist_tracked(skyline(remaining, dims))
         tagged = sky.withColumn("layer", F.lit(layer))
         out = tagged if out is None else out.unionByName(tagged)
         if layer < n_layers:
-            nxt = remaining.exceptAll(sky).cache()
+            nxt = remaining.exceptAll(sky)
+            nxt = _persist_tracked(nxt) if layer == n_layers - 1 else nxt.cache()
             nxt.count()  # materialize before freeing the parent cache
             if layer > 1:
                 remaining.unpersist()

@@ -235,6 +235,22 @@ def test_layers(spark):
     assert by_layer == {1: [1], 2: [2], 3: [3]}
 
 
+def test_layers_keep_persisted_rdds_bounded(spark):
+    """Every cache a ``skyline_layers`` call leaves behind is tracked, so
+    repeated calls on distinct plans grow the session's persisted RDDs
+    by at most the tracked FIFO's cap."""
+    from skylinemapreducehadoop_spark.operators._cache import _PERSISTED_CAP
+
+    rows = [(i, float(i % 7), float((i * 3) % 11)) for i in range(40)]
+    base = spark.createDataFrame(rows, "id int, x double, y double")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    for i in range(12):
+        # a distinct filter per call: no call hits another call's cache
+        skyline_layers(base.where(F.col("x") > -1.0 - i), [("x", "min"), ("y", "min")], 3).count()
+    assert persisted().size() - before <= _PERSISTED_CAP
+
+
 def test_empty_input(spark):
     df = spark.createDataFrame([], "id int, x double, y double")
     assert skyline(df, [("x", "min"), ("y", "min")]).count() == 0
