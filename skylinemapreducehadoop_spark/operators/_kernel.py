@@ -128,6 +128,20 @@ def skyline_mask(values: np.ndarray, chunk: int = _CHUNK) -> np.ndarray:
     return mask
 
 
+def layer_numbers(values: np.ndarray, n_layers: int) -> np.ndarray:
+    """``int32[n]``: each row's Pareto layer up to ``n_layers`` (1 = skyline,
+    2 = skyline of the rest, ...: its dominance depth), 0 for deeper rows."""
+    out = np.zeros(len(values), dtype=np.int32)
+    rest = np.arange(len(values))
+    for layer in range(1, n_layers + 1):
+        mask = skyline_mask(values[rest])
+        out[rest[mask]] = layer
+        rest = rest[~mask]
+        if not len(rest):
+            break
+    return out
+
+
 def dominates(p: np.ndarray, q: np.ndarray) -> bool:
     """Strict Pareto dominance on min-normalized vectors (Point.java:62-70)."""
     return bool(np.all(p <= q) and np.any(p < q))

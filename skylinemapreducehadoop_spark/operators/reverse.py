@@ -54,36 +54,44 @@ from skylinemapreducehadoop_spark.operators.skyline import (
     _local_filter_fn,
     _persist_tracked,
     _verify_candidates,
+    skyline,
 )
 
 #: rows per block of the fine first local pass
 _LOCAL_BLOCK_ROWS = 4_096
+#: cells of one (candidates, rows) matrix of ``_box_violations``
+_BOX_CELLS = 1 << 22
 
 
 def _box_violations(q: np.ndarray):
-    """``count_fn`` for the reverse skyline: for each candidate p, the
-    rows t that dominate q w.r.t. p — |t - p| <= |q - p| componentwise,
-    strict somewhere, and t != p in some dimension. Counts are exact,
-    so ``cap`` is not needed."""
+    """``count_fn`` for the reverse skyline, folded one dimension at a time
+    like ``_kernel.dominance_matrix``: for each candidate p, the rows t
+    that dominate q w.r.t. p — |t - p| <= |q - p| componentwise, strict
+    somewhere, and t != p in some dimension. Counts are exact, so
+    ``cap`` is not needed."""
 
     def counts(cand: np.ndarray, rows: np.ndarray, cap: int | None = None) -> np.ndarray:
         out = np.zeros(len(cand), dtype=np.int64)
-        if len(cand) == 0 or len(rows) == 0:
-            return out
         radii = np.abs(q[None, :] - cand)
-        # chunk the (candidates x rows x dims) block to ~64 MB
-        step = max(1, (1 << 26) // max(len(rows) * cand.shape[1], 1))
+        step = max(1, _BOX_CELLS // max(len(rows), 1))
         for s0 in range(0, len(cand), step):
-            p = cand[s0 : s0 + step]  # (s, d)
-            r = radii[s0 : s0 + step]
-            diff = np.abs(rows[None, :, :] - p[:, None, :])  # (s, m, d)
-            le = (diff <= r[:, None, :]).all(axis=2)
-            lt = (diff < r[:, None, :]).any(axis=2)
-            neq = (rows[None, :, :] != p[:, None, :]).any(axis=2)
+            p, r = cand[s0 : s0 + step, :, None], radii[s0 : s0 + step, :, None]
+            le, lt, neq = True, False, False
+            for k, t in enumerate(rows.T):
+                diff = np.abs(t - p[:, k])  # (s, m)
+                le, lt, neq = le & (diff <= r[:, k]), lt | (diff < r[:, k]), neq | (t != p[:, k])
             out[s0 : s0 + step] = (le & lt & neq).sum(axis=1)
         return out
 
     return counts
+
+
+def _query_vector(dim_cols: list[str], query_point: Sequence[float]) -> np.ndarray:
+    """``query_point`` as a float64 vector, one value per dimension."""
+    q = np.asarray(list(query_point), dtype=np.float64)
+    if q.shape != (len(dim_cols),):
+        raise ValueError(f"query_point must have {len(dim_cols)} values, got {q.shape}")
+    return q
 
 
 def reverse_skyline(
@@ -95,17 +103,10 @@ def reverse_skyline(
     ``dims`` (all numeric/temporal; NULL-dim rows are excluded, like the
     forward skyline)."""
     dim_cols = list(dims)
-    missing = [c for c in dim_cols if c not in df.columns]
-    if missing:
-        raise ValueError(f"reverse_skyline dims not in DataFrame: {missing}")
-    q = np.asarray(list(query_point), dtype=np.float64)
-    if q.shape != (len(dim_cols),):
-        raise ValueError(
-            f"query_point must have {len(dim_cols)} values, got {q.shape}"
-        )
+    clean = _drop_null_dims(df, dim_cols)
+    q = _query_vector(dim_cols, query_point)
     # unsigned dims: the distance transform has no min/max direction
     dim_signs = [(c, 1.0) for c in dim_cols]
-    clean = _drop_null_dims(df, dim_cols)
     violations = _box_violations(q)
     local_pass = _local_filter_fn(dim_signs, violations, 1)
 
@@ -159,19 +160,11 @@ def dynamic_skyline(
     properties apply unchanged. Tie semantics inherit from the
     forward skyline: rows at identical distances both survive.
     """
-    from skylinemapreducehadoop_spark.operators.skyline import skyline
-
     dim_cols = list(dims)
-    missing = [c for c in dim_cols if c not in df.columns]
-    if missing:
-        raise ValueError(f"dynamic_skyline dims not in DataFrame: {missing}")
-    q = np.asarray(list(query_point), dtype=np.float64)
-    if q.shape != (len(dim_cols),):
-        raise ValueError(
-            f"query_point must have {len(dim_cols)} values, got {q.shape}"
-        )
+    # a NULL dimension has a NULL distance, which skyline drops anyway
+    proj = _drop_null_dims(df, dim_cols)
+    q = _query_vector(dim_cols, query_point)
     tmp = {c: f"__dyn_{c}" for c in dim_cols}
-    proj = df
     for c, qi in zip(dim_cols, q):
         proj = proj.withColumn(tmp[c], F.abs(F.col(c) - F.lit(float(qi))))
     out = skyline(proj, [(tmp[c], "min") for c in dim_cols], strategy=strategy)

@@ -35,7 +35,8 @@ pass and bound the merge fan-in.
 Null semantics: rows with NULL in any skyline dimension are excluded
 (documented engine semantics; the reference would corrupt on its
 missing-value sentinels — SURVEY.md §1.2). The null filter is applied
-Spark-side with ``dropna`` so Catalyst pushes IsNotNull into the scan.
+Spark-side as an explicit IsNotNull conjunction (``_drop_null_dims``),
+which Catalyst pushes into the scan.
 """
 
 from __future__ import annotations
@@ -48,18 +49,22 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from skylinemapreducehadoop_spark.operators._kernel import dominator_counts, skyline_mask
+from skylinemapreducehadoop_spark.operators._kernel import dominator_counts, layer_numbers, skyline_mask
 
 DimSpec = Sequence[tuple[str, str]]
 
 
 def _drop_null_dims(df: DataFrame, dim_cols: Sequence[str]) -> DataFrame:
-    """All-dims-non-null filter as an AND of per-column IsNotNull.
+    """All-dims-non-null filter as an AND of per-column IsNotNull; every
+    skyline operator passes here, so it also rejects missing dims.
 
     ``dropna(subset=...)`` compiles to ``atleastnnonnulls(n, ...)``,
     which parquet cannot push; the explicit conjunction reaches the
     scan as PushedFilters (verified in the formatted plan).
     """
+    missing = [c for c in dim_cols if c not in df.columns]
+    if missing:
+        raise ValueError(f"skyline dims not in DataFrame: {missing}")
     cond = F.lit(True)
     for c in dim_cols:
         cond = cond & F.col(c).isNotNull()
@@ -136,19 +141,16 @@ def _signed_columns(schema: T.StructType, dim_signs: list[tuple[str, float]]) ->
 
 def _arrow_skyline(tbl: "pa.Table", dim_signs: list[tuple[str, float]]) -> "pa.Table":
     """Skyline of one in-memory Arrow table (dims already non-null)."""
-    if tbl.num_rows == 0:
-        return tbl
     mask = skyline_mask(_arrow_matrix(tbl, dim_signs))
     return tbl.filter(pa.array(mask))
 
 
-def _partition_skyline_fn(dim_signs: list[tuple[str, float]]):
-    """mapInArrow function: incremental skyline over the partition's batches.
-
-    Keeps a running skyline across Arrow batches so memory stays bounded
-    by the partition's Pareto set, not the partition. Pure Arrow:
-    pass-through columns are never converted to pandas dtypes.
-    """
+def _partition_skyline_fn(dim_signs: list[tuple[str, float]], n_layers: int = 1, tag: bool = False):
+    """mapInArrow function: the partition's first ``n_layers`` Pareto
+    layers (1: its skyline), with ``tag`` also a last ``__layer`` column.
+    A running accumulator across Arrow batches bounds memory by those
+    layers (exact by the law in ``skyline_layers``). Pure Arrow:
+    pass-through columns are never converted to pandas dtypes."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         acc: pa.Table | None = None
@@ -157,8 +159,11 @@ def _partition_skyline_fn(dim_signs: list[tuple[str, float]]):
                 continue
             tbl = pa.Table.from_batches([batch])
             combined = pa.concat_tables([acc, tbl]) if acc is not None else tbl
-            acc = _arrow_skyline(combined, dim_signs)
+            layers = layer_numbers(_arrow_matrix(combined, dim_signs), n_layers)
+            acc = combined.filter(pa.array(layers > 0))
         if acc is not None and acc.num_rows:
+            if tag:
+                acc = acc.append_column("__layer", pa.array(layers[layers > 0]))
             yield from acc.combine_chunks().to_batches()
 
     return fn
@@ -172,9 +177,7 @@ _MERGE_FAN_IN = 16
 # bounded registry of per-query persisted frames — shared by every
 # operator that materializes a multiply-consumed intermediate (see
 # operators/_cache.py for the eviction semantics)
-from skylinemapreducehadoop_spark.operators._cache import (
-    persist_tracked as _persist_tracked,
-)
+from skylinemapreducehadoop_spark.operators._cache import persist_tracked as _persist_tracked, scan_partitions
 
 
 def skyline(
@@ -218,19 +221,14 @@ def skyline(
     counted so the auto guard can size its merge levels (tree) or its
     block count (blocked) from the measured candidate count; the count
     job fills the cache the merge plan then reuses, so the kernel runs
-    once.
+    once. ``skyline_layers`` runs the same plan, so this one count is
+    also the only eager job it starts, whatever its depth.
     """
     dim_signs = normalize_dims(dims)
-    dim_cols = [c for c, _ in dim_signs]
-    missing = [c for c in dim_cols if c not in df.columns]
-    if missing:
-        raise ValueError(f"skyline dims not in DataFrame: {missing}")
-
-    clean = _drop_null_dims(df, dim_cols)
-    fn = _partition_skyline_fn(dim_signs)
+    clean = _drop_null_dims(df, [c for c, _ in dim_signs])
 
     if strategy == "bruteforce":
-        return clean.repartition(1).mapInArrow(fn, df.schema)
+        return clean.repartition(1).mapInArrow(_partition_skyline_fn(dim_signs), df.schema)
 
     if strategy == "quadtree":
         from skylinemapreducehadoop_spark.operators.quadtree import quadtree_skyline
@@ -241,21 +239,28 @@ def skyline(
         raise ValueError(f"unknown strategy {strategy!r}")
     if merge not in ("tree", "blocked"):
         raise ValueError(f"unknown merge {merge!r}")
+    return _twophase(clean, dim_signs, merge)
 
+
+def _twophase(
+    clean: DataFrame, dim_signs: list[tuple[str, float]], merge: str = "tree", n_layers: int | None = None
+) -> DataFrame:
+    """Local pass (persisted, counted) over null-free ``clean``, then the
+    ``merge``; with ``n_layers`` (tree only), the first n layers, tagged ``__layer``."""
     # The local pass is CPU-bound kernel work: if the PLANNED scan has
     # fewer partitions than cores (small files / single unsplittable
     # parquet), fan out first. Splittable sources (text under
     # minPartitionNum) already scan wide — skip the redundant exchange.
     # At cluster scale input splits >> cores and this no-ops.
-    from skylinemapreducehadoop_spark.operators._cache import scan_partitions
-
-    sc = df.sparkSession.sparkContext
+    schema = clean.schema
+    sc = clean.sparkSession.sparkContext
     if 0 < scan_partitions(clean) < sc.defaultParallelism:
         clean = clean.repartition(sc.defaultParallelism)
-    # Both merges size themselves from the local skyline: materialize it
+    fn = _partition_skyline_fn(dim_signs, n_layers or 1)
+    # Both merges size themselves from the local pass: materialize it
     # once and measure it. The persist means the local pass is not
     # recomputed by the merge.
-    local = _persist_tracked(clean.mapInArrow(fn, df.schema))
+    local = _persist_tracked(clean.mapInArrow(fn, schema))
     n_local = local.count()
 
     if merge == "blocked":
@@ -264,11 +269,12 @@ def skyline(
         # grouping and join keys both treat NaN as equal to NaN and -0.0
         # as equal to 0.0, so no copy is lost). Repeated vectors need no
         # distinct: they only multiply a count, and k = 1 asks for 0.
+        dim_cols = [c for c, _ in dim_signs]
         cand = local.select(*dim_cols)
         keep = _verify_candidates(cand, cand, n_local, dim_signs, dominator_counts, 1, blocked=True)
-        return local.join(keep, on=dim_cols, how="left_semi").select(*df.columns)
+        return local.join(keep, on=dim_cols, how="left_semi").select(*schema.names)
 
-    # Tree-reduce the union of local skylines down to one partition.
+    # Tree-reduce the union of local passes down to one partition.
     # The final merge MUST be a single partition (global dominance needs
     # every surviving candidate in one place — the reference's single
     # reducer, /root/reference/Skyline.java:414), but on anti-correlated
@@ -283,8 +289,11 @@ def skyline(
 
     current = local
     for w in widths:
-        current = current.repartition(w).mapInArrow(fn, df.schema)
-    return current.repartition(1).mapInArrow(fn, df.schema)
+        current = current.repartition(w).mapInArrow(fn, schema)
+    if n_layers is None:
+        return current.repartition(1).mapInArrow(fn, schema)
+    tagged = T.StructType(schema.fields + [T.StructField("__layer", T.IntegerType(), False)])
+    return current.repartition(1).mapInArrow(_partition_skyline_fn(dim_signs, n_layers, tag=True), tagged)
 
 
 #: candidate sets up to this many vectors are verified broadcast-and-count
@@ -537,34 +546,17 @@ def skyline_by(df: DataFrame, keys: Sequence[str] | str, dims: DimSpec) -> DataF
 
 def skyline_layers(df: DataFrame, dims: DimSpec, n_layers: int) -> DataFrame:
     """Ranked Pareto bands: layer 1 = skyline, layer 2 = skyline of the
-    remainder, ... Returns ``df``'s columns plus ``layer int``.
+    remainder, ... up to ``n_layers``. Returns ``df``'s columns plus
+    ``layer int`` (a ``layer`` column of ``df`` is replaced in place).
 
-    Driver-side loop of ``n_layers`` skyline+exceptAll rounds; each round
-    shuffles only the shrinking remainder. ``exceptAll`` keeps duplicate
-    multiplicity consistent with strict-dominance tie semantics.
+    One pass: ``skyline``'s twophase plan with every pass keeping the
+    first n layers, so it runs the same one eager count at any depth.
+    Exact: a subset of the rows never deepens a row's layer, and every
+    dominator of a row in layer <= n is in a layer < n and so is kept.
     """
     if n_layers < 1:
         raise ValueError("n_layers must be >= 1")
-    remaining = df
-    out: DataFrame | None = None
-    for layer in range(1, n_layers + 1):
-        # Each layer's skyline feeds BOTH the output union and the next
-        # round's exceptAll — cache so the kernel runs once per layer,
-        # not once per reference (and lineage doesn't re-read the scan).
-        # sky caches stay pinned (they ARE the output); each round's
-        # remaining is unpersisted once the next round's is materialized
-        # (layer 1's `remaining` is the caller's frame — never touched).
-        # The last remaining feeds the returned plan's last layer, so it
-        # is tracked like the sky caches instead of outliving the call.
-        sky = _persist_tracked(skyline(remaining, dims))
-        tagged = sky.withColumn("layer", F.lit(layer))
-        out = tagged if out is None else out.unionByName(tagged)
-        if layer < n_layers:
-            nxt = remaining.exceptAll(sky)
-            nxt = _persist_tracked(nxt) if layer == n_layers - 1 else nxt.cache()
-            nxt.count()  # materialize before freeing the parent cache
-            if layer > 1:
-                remaining.unpersist()
-            remaining = nxt
-    assert out is not None
-    return out
+    dim_signs = normalize_dims(dims)
+    clean = _drop_null_dims(df, [c for c, _ in dim_signs])
+    out = _twophase(clean, dim_signs, n_layers=n_layers)
+    return out.withColumn("layer", F.col("__layer")).drop("__layer")

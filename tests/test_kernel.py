@@ -16,6 +16,7 @@ from skylinemapreducehadoop_spark.operators import _kernel
 from skylinemapreducehadoop_spark.operators._kernel import (
     dominance_matrix,
     dominates,
+    layer_numbers,
     skyline_mask,
 )
 
@@ -199,3 +200,34 @@ def test_dominator_counts_matches_scalar(data, d, cap, cells):
     if cap is not None:
         want = [min(w, cap) for w in want]
     assert got.tolist() == want
+
+
+def brute_force_depths(values: np.ndarray) -> list[int]:
+    """Dominance depth by its recursion: 1 + the largest depth among a
+    row's strict dominators (1 when it has none)."""
+    depth: dict[int, int] = {}
+
+    def of(i: int) -> int:
+        if i not in depth:
+            doms = [j for j in range(len(values)) if dominates(values[j], values[i])]
+            depth[i] = 1 + max((of(j) for j in doms), default=0)
+        return depth[i]
+
+    return [of(i) for i in range(len(values))]
+
+
+@settings(max_examples=300, deadline=None)
+@given(data=st.data(), d=st.integers(1, 4), n_layers=st.integers(1, 6))
+def test_layer_numbers_match_depth_recursion(data, d, n_layers):
+    """Peeling ``n_layers`` skylines gives each row its dominance depth,
+    or 0 past the last layer asked for: duplicates share a layer, NaN
+    rows are layer 1, and asking for more layers than exist labels
+    every row."""
+    values = data.draw(_matrix(d), label="values")
+    depths = brute_force_depths(values)
+    got = layer_numbers(values, n_layers)
+    assert got.dtype == np.int32
+    assert got.tolist() == [k if k <= n_layers else 0 for k in depths]
+    assert layer_numbers(values, len(values) + 1).tolist() == depths
+    if n_layers == 1:
+        assert got.tolist() == skyline_mask(values).astype(np.int32).tolist()

@@ -3,9 +3,13 @@
 from __future__ import annotations
 
 import importlib
+from unittest import mock
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from hypothesis.extra import numpy as hnp
 
 from skylinemapreducehadoop_spark.operators.reverse import reverse_skyline
 
@@ -136,3 +140,39 @@ def test_reverse_skyline_blocked_matches_broadcast_on_typed_dims(spark, monkeypa
     blocked = sorted(r["id"] for r in reverse_skyline(df, ["x", "y"], (qx, 20.0)).collect())
     assert blocked == via_broadcast == want
     assert want
+
+
+def _box_violations_3d(q, cand, rows):
+    """The box count over one (candidates, rows, dims) block — the
+    reference the per-dimension fold in ``reverse._box_violations`` must
+    equal exactly."""
+    radii = np.abs(q[None, :] - cand)
+    diff = np.abs(rows[None, :, :] - cand[:, None, :])
+    le = (diff <= radii[:, None, :]).all(axis=2)
+    lt = (diff < radii[:, None, :]).any(axis=2)
+    neq = (rows[None, :, :] != cand[:, None, :]).any(axis=2)
+    return (le & lt & neq).sum(axis=1)
+
+
+_POOL = [-np.inf, -1.0, -0.0, 0.0, 0.5, 1.0, 3.0, np.inf, np.nan]
+
+
+@settings(max_examples=300, deadline=None)
+@given(data=st.data(), d=st.integers(1, 5), cells=st.sampled_from([1, 7, 1 << 22]))
+def test_box_violations_match_3d_formula(data, d, cells):
+    """Ties, duplicates, ±0, ±inf and NaN in the query point, the
+    candidates and the rows, under any candidate chunking."""
+    from skylinemapreducehadoop_spark.operators import reverse
+
+    elements = st.sampled_from(_POOL) | st.floats(-4, 4, width=16)
+
+    def matrix(max_rows):
+        return hnp.arrays(np.float64, st.tuples(st.integers(0, max_rows), st.just(d)), elements=elements)
+
+    q = data.draw(hnp.arrays(np.float64, d, elements=elements), label="q")
+    cand = data.draw(matrix(30), label="cand")
+    rows = data.draw(matrix(30), label="rows")
+    with mock.patch.object(reverse, "_BOX_CELLS", cells), np.errstate(invalid="ignore"):
+        got = reverse._box_violations(q)(cand, rows)
+        want = _box_violations_3d(q, cand, rows)
+    assert got.tolist() == want.tolist()

@@ -235,6 +235,67 @@ def test_layers(spark):
     assert by_layer == {1: [1], 2: [2], 3: [3]}
 
 
+def test_layers_match_kernel_depths(spark):
+    """Every partition's layers, merged: the layer of each row equals
+    its depth peeled on the collected rows, across a frame with empty
+    partitions, duplicates, NaN and a NULL dimension, for n below, at
+    and beyond its number of layers."""
+    import numpy as np
+
+    from skylinemapreducehadoop_spark.operators._kernel import layer_numbers
+
+    rng = np.random.default_rng(8)
+    vals = rng.integers(0, 6, size=(160, 3)).astype(float)
+    vals[::23, 1] = np.nan
+    rows = [(i, i % 3, *map(float, v)) for i, v in enumerate(vals)]
+    rows += [(1000 + i, r[1], *r[2:]) for i, r in enumerate(rows[:20])]
+    rows.append((2000, 0, None, 0.0, 0.0))
+    df = spark.createDataFrame(rows, "id int, g int, x double, y double, z double")
+    # three keys hashed into seven partitions: at least four are empty
+    df = df.repartition(7, "g")
+    assert 0 in df.rdd.glom().map(len).collect()
+    dims = [("x", "min"), ("y", "max"), ("z", "min")]
+
+    kept = [r for r in rows if r[2] is not None]
+    signed = np.array([(r[2], -r[3], r[4]) for r in kept])
+    for n in (1, 3, 40):
+        want = {r[0]: int(k) for r, k in zip(kept, layer_numbers(signed, n)) if k}
+        got = {r["id"]: r["layer"] for r in skyline_layers(df, dims, n).collect()}
+        assert got == want, n
+    assert max(want.values()) < 40  # n = 40 is past the last layer
+
+
+def test_layers_run_as_one_skyline(spark):
+    """``skyline_layers`` is one twophase plan: calling it starts the
+    same eager jobs as one ``skyline`` call at any depth, and its plan
+    does not grow with the depth. Jobs are counted per job group with
+    the status tracker."""
+    rows = [(i, float(i % 13), float((i * 7) % 17)) for i in range(400)]
+    df = spark.createDataFrame(rows, "id int, x double, y double").repartition(7)
+    dims = [("x", "min"), ("y", "min")]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(tag, call):
+        sc.setJobGroup(tag, tag)
+        try:
+            out = call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(tracker.getJobIdsForGroup(tag)), out
+
+    def plan_len(out):
+        return len(out._jdf.queryExecution().analyzed().toString())
+
+    n_sky, _ = jobs("layers-skyline", lambda: skyline(df, dims))
+    n2, out2 = jobs("layers-2", lambda: skyline_layers(df, dims, 2))
+    assert n2 == n_sky
+    n12, out12 = jobs("layers-12", lambda: skyline_layers(df, dims, 12))
+    assert n12 == n_sky
+    assert plan_len(out12) <= 1.2 * plan_len(out2)
+
+
 def test_layers_keep_persisted_rdds_bounded(spark):
     """Every cache a ``skyline_layers`` call leaves behind is tracked, so
     repeated calls on distinct plans grow the session's persisted RDDs
@@ -264,9 +325,23 @@ def test_bad_args(spark):
     with pytest.raises(ValueError):
         skyline(df, [("x", "up")])
     with pytest.raises(ValueError):
-        skyline(df, [("nope", "min")])
-    with pytest.raises(ValueError):
         skyline(df, [("x", "min")], strategy="wat")
+    from skylinemapreducehadoop_spark.operators.reverse import dynamic_skyline, reverse_skyline
+
+    missing = [("nope", "min")]
+    for call in (
+        lambda: skyline(df, missing),
+        lambda: skyline_kband(df, missing, 2),
+        lambda: skyline_by(df, "id", missing),
+        lambda: skyline_layers(df, missing, 2),
+        lambda: reverse_skyline(df, ["nope"], (1.0,)),
+        lambda: dynamic_skyline(df, ["nope"], (1.0,)),
+    ):
+        with pytest.raises(ValueError, match="nope"):
+            call()
+    for op in (reverse_skyline, dynamic_skyline):
+        with pytest.raises(ValueError, match="query_point"):
+            op(df, ["x"], (1.0, 2.0))
 
 
 def test_bigint_passthrough_bit_exact(spark):
